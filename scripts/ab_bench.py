@@ -106,30 +106,41 @@ def main() -> None:
         "a": {ln: [] for ln in lanes}, "b": {ln: [] for ln in lanes}}
     rounds_med: list[dict[str, dict[str, float]]] = []
 
+    failure = None
     for rnd in range(args.rounds):
         order = ["a", "b"] if rnd % 2 == 0 else ["b", "a"]
-        round_rec: dict[str, dict[str, float]] = {}
+        got: dict[str, dict[str, list[float]]] = {}
         for side in order:
             cmd = [sys.executable, os.path.abspath(__file__), "--one-pass",
                    "--tree", sides[side], "--lanes", ",".join(lanes),
                    "--runs", str(args.runs), "--sf", args.sf]
             res = subprocess.run(cmd, capture_output=True, text=True,
                                  cwd=sides[side], env=side_env[side])
-            line = res.stdout.strip().splitlines()[-1]
-            got = json.loads(line)
-            for ln, xs in got.items():
-                samples[side][ln].extend(xs)
-            round_rec[side] = {ln: statistics.median(xs)
-                               for ln, xs in got.items()}
+            lines = res.stdout.strip().splitlines()
+            if res.returncode != 0 or not lines:
+                failure = (f"round {rnd} side {side}: one-pass exited "
+                           f"{res.returncode} with {len(lines)} stdout lines")
+                print(f"{failure}; its stderr:\n{res.stderr}", file=sys.stderr)
+                break
+            got[side] = json.loads(lines[-1])
             print(f"round {rnd} side {side}: "
-                  f"{round(sum(v for v in round_rec[side].values()), 3)} s total",
+                  f"{round(sum(statistics.median(xs) for xs in got[side].values()), 3)} s total",
                   flush=True)
-        rounds_med.append(round_rec)
+        if failure:
+            break
+        # a round counts only when both sides finished it
+        for side, lane_xs in got.items():
+            for ln, xs in lane_xs.items():
+                samples[side][ln].extend(xs)
+        rounds_med.append({side: {ln: statistics.median(xs) for ln, xs in lane_xs.items()}
+                           for side, lane_xs in got.items()})
+    if not rounds_med:
+        sys.exit(f"ab_bench: no round completed ({failure})")
 
-    report = {"lanes": {}, "rounds": args.rounds, "runs_per_round": args.runs,
+    report = {"lanes": {}, "rounds": len(rounds_med), "runs_per_round": args.runs,
               "tree_a": args.tree_a, "tree_b": args.tree_b,
               "label_a": args.label_a, "label_b": args.label_b,
-              "per_round_medians": rounds_med}
+              "per_round_medians": rounds_med, "failure": failure}
     print(f"\n{'lane':28s} {args.label_a:>8s} {args.label_b:>8s} "
           f"{'b/a':>6s}  paired-deltas(b-a)")
     for ln in lanes:
@@ -141,16 +152,22 @@ def main() -> None:
             "ratio_b_over_a": round(mb / ma, 3) if ma else None,
             "paired_round_deltas": deltas,
             "samples_a": samples["a"][ln], "samples_b": samples["b"][ln]}
-        print(f"{ln:28s} {ma:8.3f} {mb:8.3f} {mb/ma:6.2f}  {deltas}")
+        print(f"{ln:28s} {ma:8.3f} {mb:8.3f} {_ratio(mb, ma)}  {deltas}")
     ta = sum(statistics.median(samples['a'][ln]) for ln in lanes)
     tb = sum(statistics.median(samples['b'][ln]) for ln in lanes)
     report["total_a"] = round(ta, 3)
     report["total_b"] = round(tb, 3)
-    print(f"{'TOTAL':28s} {ta:8.3f} {tb:8.3f} {tb/ta:6.2f}")
+    print(f"{'TOTAL':28s} {ta:8.3f} {tb:8.3f} {_ratio(tb, ta)}")
     if args.out:
         with open(args.out, "w") as f:
             json.dump(report, f, indent=1)
         print(f"wrote {args.out}")
+    if failure:
+        sys.exit(f"ab_bench: stopped early, report covers {len(rounds_med)} rounds ({failure})")
+
+
+def _ratio(b: float, a: float) -> str:
+    return f"{b / a:6.2f}" if a else f"{'n/a':>6s}"
 
 
 if __name__ == "__main__":

@@ -709,20 +709,25 @@ def w3b_cumsum_reverse(spark, sf_dir):
       FROM events
     )
     SELECT event_id,
-           round(cum - coalesce(last_value(CASE WHEN event_type = 'signup' THEN cum END IGNORE NULLS)
-                 OVER (PARTITION BY user_id ORDER BY tu, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0.0), 6)
-             AS cum_since_marker
+           {R6P_SQL.format(
+               "(cum - coalesce(last_value(CASE WHEN event_type = 'signup' THEN cum END"
+               " IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY tu, event_id"
+               " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0.0))"
+           )} AS cum_since_marker
     FROM t
     """,
 )
 def w4_cumsum_reset(spark, sf_dir):
     """W4 — cumsum with reset at markers (reference reset_transport_at_GPS
-    :1329-1333): running value re-zeroed at each 'signup' event."""
+    :1329-1333): running value re-zeroed at each 'signup' event.
+
+    Rounded with ``r6p`` on both sides: the two engines' running sums may
+    associate differently, so ``cum - marker`` can come out as a tiny
+    negative on one side only, which ``round(…, 6)`` turns into -0.0."""
     ev = events(spark, sf_dir)
     return ev.select(
         "event_id",
-        r6(
+        r6p(
             W.cumsum_reset("value", F.col("event_type") == "signup", ["user_id"], EV_ORDER)
         ).alias("cum_since_marker"),
     )

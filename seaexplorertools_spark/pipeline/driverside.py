@@ -1,10 +1,15 @@
-"""Driver-side optimization loops — O1/O2 (SURVEY §2.8).
+"""Optimization loops — O1/O2 (SURVEY §2.8): the reference's scipy
+``fmin`` fits, in numpy. They touch SMALL data (ping-level magnetometer
+triplets ~1e5 rows; the gridded depth×profile matrix of one mission).
 
-These are the reference's scipy ``fmin`` fits. They touch SMALL data (ping-
-level magnetometer triplets ~1e5 rows; the gridded depth×profile matrix),
-so the Spark-first answer is: aggregate/collect once, optimize in numpy at
-the driver, push the fitted scalars back into the lazy plan as literals
-(reference O1 :389-397, O2 calc_bias :1954-1984).
+- O1, the compass fit (reference :389-397), stays on the driver: collect
+  once, optimize, push the fitted coefficients back into the lazy plan
+  as literals.
+- O2, the shear-bias fit (reference calc_bias :1954-1984), runs per
+  mission on the executors, inside ``velocity.calc_bias``'s grouped
+  ``applyInPandas``, so a fleet's missions fit in parallel and no grid
+  comes back to the driver. ``velocity`` registers this module with
+  cloudpickle by value, so the workers need not import this package.
 """
 
 from __future__ import annotations

@@ -10,7 +10,7 @@ track) and fit the scalar shear bias.
                                   F6 + F5 + scatter-back join)
     reference_shear  :1658-1717  (A1 grids + W3 vertical integration + W6
                                   demean + residence weighting + referencing)
-    calc_bias        :1954-1984  (O2 driver-side fmin on the small grid)
+    calc_bias        :1954-1984  (O2 fmin per mission on the executors)
 
 The J3 positional re-read (:2068-2074) is avoided by projecting all glider
 columns at first read (SURVEY §7 risk 8 — documented deviation).
@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -29,7 +30,16 @@ from ..functions import math as M
 from ..operators import windows as W
 from ..operators.grid import bucket
 from ..operators.joins import asof_join, interp_join
-from . import gridding
+from . import driverside, gridding
+from .driverside import apply_bias, fit_shear_bias
+from .fleet import stage_boundary
+
+# the executor bias fit calls into driverside; Python workers need not
+# import this package, so its functions travel inside the pickled closure
+cloudpickle.register_pickle_by_value(driverside)
+
+# groupBy key of calc_bias's single group when no mission_col is set
+_ONE_MISSION = "__bias_group"
 
 
 def _lon2m(lat):
@@ -338,79 +348,63 @@ def reference_shear(
     return g
 
 
+def _bias_fit_apply():
+    """The executor function of :func:`calc_bias`: ``(key, pdf) -> pdf``
+    over every grid row of one mission, with ADCP_E/ADCP_N replaced by the
+    bias-corrected values.
+
+    The rows with both grid keys are pivoted into the mission's (depth_bin
+    × profile_num) matrices, fitted with ``fit_shear_bias`` and corrected
+    with ``apply_bias``. NULL placement is that of a left join of the grid
+    against the corrected cells: a row with a NULL key, or of a NULL
+    mission, gets NaN in both components, and a cell whose corrected
+    component is NaN keeps NaN in that component. Arrow turns every pandas
+    NaN into NULL on the way out, in all columns.
+
+    Returned from a factory so cloudpickle ships the closure by value, and
+    with it the driverside functions (registered by value above): Python
+    workers need not be able to import this package."""
+
+    def fit_apply(key, pdf):
+        e = np.full(len(pdf), np.nan)
+        n = np.full(len(pdf), np.nan)
+        keyed = (pdf["profile_num"].notna() & pdf["depth_bin"].notna()).to_numpy()
+        if keyed.any() and not pd.isna(key[0]):
+            sub = pdf[keyed]
+            piv = {
+                c: sub.pivot_table(index="depth_bin", columns="profile_num", values=c, dropna=False)
+                for c in ("ADCP_E", "ADCP_N", "speed_e_g", "speed_n_g")
+            }
+            cols, idx = piv["ADCP_E"].columns, piv["ADCP_E"].index
+            mats = [p.reindex(index=idx, columns=cols).to_numpy(float) for p in piv.values()]
+            e_m, n_m = apply_bias(*mats, fit_shear_bias(*mats))
+            i, j = idx.get_indexer(sub["depth_bin"]), cols.get_indexer(sub["profile_num"])
+            e[keyed], n[keyed] = e_m[i, j], n_m[i, j]
+        return pdf.assign(ADCP_E=e, ADCP_N=n)
+
+    return fit_apply
+
+
 def calc_bias(grid: DataFrame, options: dict) -> DataFrame:
-    """O2 (reference calc_bias :1954-1984): collect the small (depth ×
-    profile) grids, fmin the scalar bias coefficient driver-side, apply it
-    back in the lazy plan via the gridded glider speeds.
+    """O2 (reference calc_bias :1954-1984): fit the scalar shear-bias
+    coefficient on the small (depth × profile) grid and apply it.
+
+    Lazy: one ``groupBy(mission).applyInPandas`` pivots each mission's
+    rows, fits and applies the bias on an executor and returns every grid
+    row (:func:`_bias_fit_apply`), so building the plan submits no job and
+    the fleet's missions fit in parallel.
 
     With ``mission_col`` set, the coefficient is fitted PER MISSION — the
     bias is an instrument/attitude property of one deployment, and a single
-    global coefficient would couple unrelated missions."""
-    from .driverside import apply_bias, fit_shear_bias
-
+    global coefficient would couple unrelated missions. Without it the whole
+    grid is one group, keyed by a named constant column (a bare literal in
+    ``groupBy`` would be read as an ordinal)."""
     mission_col = options.get("mission_col")
-    sel = ["profile_num", "depth_bin", "ADCP_E", "ADCP_N", "speed_e_g", "speed_n_g"]
-    if mission_col:
-        sel.append(mission_col)
-    pdf = grid.select(*sel).toPandas()
-    # rows with NULL grid keys (out-of-range buckets from the full join)
-    # carry no velocity and cannot be keyed back — exclude from the fit
-    pdf = pdf.dropna(subset=["profile_num", "depth_bin"])
-    if len(pdf) == 0:
-        return grid
-
-    def fit_group(sub):
-        piv = {
-            c: sub.pivot_table(index="depth_bin", columns="profile_num", values=c, dropna=False)
-            for c in ("ADCP_E", "ADCP_N", "speed_e_g", "speed_n_g")
-        }
-        cols = piv["ADCP_E"].columns
-        idx = piv["ADCP_E"].index
-        mats = {c: piv[c].reindex(index=idx, columns=cols).to_numpy(float) for c in piv}
-        coeff = fit_shear_bias(mats["ADCP_E"], mats["ADCP_N"], mats["speed_e_g"], mats["speed_n_g"])
-        e, n = apply_bias(mats["ADCP_E"], mats["ADCP_N"], mats["speed_e_g"], mats["speed_n_g"], coeff)
-        # dense matrix → long rows, vectorized. Cells where BOTH adjusted
-        # components are NaN are dropped: the left join below then misses
-        # and yields the same (NULL, NULL) the dense row would have — at
-        # fleet scale the dense emission was the driver hot spot (the
-        # python tuple loop + non-Arrow createDataFrame measured ~30 s of
-        # the N=32 velocity stage).
-        pp, dd = np.meshgrid(cols.to_numpy(float), idx.to_numpy(float))
-        keep = ~(np.isnan(e) & np.isnan(n))
-        return pd.DataFrame(
-            {
-                "profile_num": pp[keep].astype("int64"),
-                "depth_bin": dd[keep].astype("int64"),
-                "ADCP_E_adj": e[keep],
-                "ADCP_N_adj": n[keep],
-            }
-        )
-
-    if mission_col:
-        frames = [fit_group(sub) for _, sub in pdf.groupby(mission_col, sort=False)]
-        adj_pd = pd.concat(frames, ignore_index=True)
-    else:
-        adj_pd = fit_group(pdf)
-
-    spark = grid.sparkSession
-    adj = spark.createDataFrame(
-        adj_pd,
-        "profile_num long, depth_bin long, ADCP_E_adj double, ADCP_N_adj double",
+    keyed = grid if mission_col else grid.withColumn(_ONE_MISSION, F.lit(0))
+    fitted = keyed.groupBy(mission_col or _ONE_MISSION).applyInPandas(
+        _bias_fit_apply(), keyed.schema
     )
-    # Arrow keeps float NaN as NaN (the tuple path emitted None) — restore
-    # NULL for single-sided NaN cells so downstream NULL semantics are
-    # unchanged
-    nan2null = {
-        c: F.when(F.isnan(F.col(c)), F.lit(None).cast("double")).otherwise(F.col(c))
-        for c in ("ADCP_E_adj", "ADCP_N_adj")
-    }
-    adj = adj.withColumns(nan2null)
-    return (
-        grid.join(adj, ["profile_num", "depth_bin"], "left")
-        .withColumn("ADCP_E", F.col("ADCP_E_adj"))
-        .withColumn("ADCP_N", F.col("ADCP_N_adj"))
-        .drop("ADCP_E_adj", "ADCP_N_adj")
-    )
+    return fitted.drop(_ONE_MISSION)
 
 
 def velocity_from_shear(
@@ -423,25 +417,17 @@ def velocity_from_shear(
     """Entry point 3 (reference velocity_from_shear :2067-2083): returns the
     long gridded dataset with referenced, bias-corrected ADCP_E/ADCP_N.
 
-    Cache boundaries (measured, round 8 — 20-dive mission, warm): the
-    DAC-augmented glider feeds THREE consumers (the grid aggregate inside
-    reference_shear, calc_bias's toPandas fit, the profile-time axis) and
-    the referenced grid ``g`` feeds TWO (the fit's toPandas, the returned
-    plan's join) — uncached, those lineages re-execute per consumer and
-    the stage ran 15.6 s; with both consistency-cached (populated by the
-    fit's own toPandas action, no extra job) it runs ~10.2 s with ~0.5 s
-    spread. The caches are LEDGERED: callers that loop missions release
-    them via release_consistency_caches()/consistency_cache_scope after
-    consuming the result (bench.py does; one-shot contract queries leave
-    them to session teardown, the lsh pattern)."""
-    from ..caching import consistency_cache
-
-    glider = consistency_cache(get_dac(ping_aug, glider, options))
-    drift = surface_drift(glider, options)  # noqa: F841 — diagnostic constraint
-    if bt is not None:
-        ping_aug = bottom_track(bt, ping_aug, options)
-    g = consistency_cache(reference_shear(gridded_cells, glider, options))
-    g = calc_bias(g, options)  # its toPandas populates both caches
+    One stage boundary: the DAC-augmented glider feeds two consumers (the
+    grid aggregate inside reference_shear and the profile-time axis), so
+    its lineage is cut once with :func:`stage_boundary` — the only Spark
+    action this function runs. The referenced grid has one consumer, the
+    executor bias fit of :func:`calc_bias`, so it needs no cache, and the
+    stage ledgers none. Surface drift and bottom track are the reference's
+    diagnostic constraints (:func:`surface_drift`, :func:`bottom_track`);
+    they do not enter the result, so ``bt`` is accepted for the reference
+    signature and left unread."""
+    glider = stage_boundary(get_dac(ping_aug, glider, options))
+    g = calc_bias(reference_shear(gridded_cells, glider, options), options)
     # per-profile mean time → profile_datetime axis (reference make_dataset :2042)
     gl_time = glider.groupBy(
         bucket(F.col("profile_number").cast("double"), 0.0, 1.0).alias("profile_num")

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -300,3 +302,172 @@ def test_dac_against_numpy(mission, stage1):
     # engine speed_e matches numpy
     se = out["speed_e"].to_numpy(float)
     assert np.allclose(se, vg_e, atol=1e-9)
+
+
+def _jobs_in(spark, fn):
+    """Call ``fn`` under a fresh job group; return its result and the
+    number of Spark jobs it submitted."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_velocity_plan_runs_only_the_dac_boundary(spark, stage1, mission):
+    """velocity_from_shear ledgers no cache, and the only Spark work it does
+    before the caller's action is the DAC stage boundary; calc_bias alone
+    runs none. Under AQE that one boundary action is several jobs (one per
+    shuffle map stage and broadcast), so the boundary's own job count is
+    the reference."""
+    from seaexplorertools_spark.caching import ledger_size
+    from seaexplorertools_spark.pipeline import stage_boundary
+    from seaexplorertools_spark.pipeline.velocity import calc_bias, get_dac, reference_shear
+
+    gridded, ping_aug, options = stage1
+    glider, bt = mission[5], mission[8]
+    before = ledger_size()
+    _, n_velocity = _jobs_in(
+        spark, lambda: velocity_from_shear(gridded, ping_aug, glider, bt, options)
+    )
+    assert ledger_size() == before
+    dac, n_boundary = _jobs_in(spark, lambda: stage_boundary(get_dac(ping_aug, glider, options)))
+    assert n_velocity == n_boundary > 0
+    grid = reference_shear(gridded, dac, options)
+    _, n_fit = _jobs_in(spark, lambda: calc_bias(grid, options))
+    assert n_fit == 0
+
+
+def _bias_grid(rng, profiles, depths, mission):
+    """Long (profile_num, depth_bin) grid of one mission, as calc_bias sees
+    it, in shuffled row order. One cell per profile has ADCP_E NaN but
+    ADCP_N finite; two extra rows carry NULL grid keys."""
+    shape = (len(depths), len(profiles))
+    dense = {
+        "ADCP_E": rng.normal(0, 0.05, shape),
+        "ADCP_N": rng.normal(0, 0.05, shape),
+        "speed_e_g": np.abs(rng.normal(0.2, 0.05, shape)),
+        "speed_n_g": np.abs(rng.normal(0.2, 0.05, shape)),
+    }
+    dense["speed_e_g"][rng.random(shape) < 0.1] = np.nan
+    dense["ADCP_E"][rng.integers(0, len(depths), len(profiles)), np.arange(len(profiles))] = np.nan
+    dd, pp = np.meshgrid(depths, profiles, indexing="ij")
+    pdf = pd.DataFrame(
+        {"profile_num": pp.ravel().astype(float), "depth_bin": dd.ravel().astype(float)}
+        | {c: m.ravel() for c, m in dense.items()}
+    )
+    nulls = pd.DataFrame(
+        {"profile_num": [np.nan, profiles[0]], "depth_bin": [depths[0], np.nan]}
+        | {c: [0.1, 0.2] for c in dense}
+    )
+    pdf = pd.concat([pdf, nulls], ignore_index=True).sample(frac=1.0, random_state=1)
+    pdf["mission"] = mission
+    return pdf.reset_index(drop=True)
+
+
+def _expected_bias(pdf):
+    """ADCP_E/ADCP_N of the old driver path: drop NULL-key rows, pivot to
+    (depth × profile) matrices, fit_shear_bias, apply_bias, then a left
+    join of the grid against the corrected cells, whose keys are never
+    NULL (NaN stands for NULL)."""
+    from seaexplorertools_spark.pipeline.driverside import apply_bias, fit_shear_bias
+
+    sub = pdf.dropna(subset=["profile_num", "depth_bin"])
+    piv = [
+        sub.pivot_table(index="depth_bin", columns="profile_num", values=c, dropna=False)
+        for c in ("ADCP_E", "ADCP_N", "speed_e_g", "speed_n_g")
+    ]
+    mats = [p.reindex(index=piv[0].index, columns=piv[0].columns).to_numpy(float) for p in piv]
+    e, n = apply_bias(*mats, fit_shear_bias(*mats))
+    pp, dd = np.meshgrid(piv[0].columns.to_numpy(float), piv[0].index.to_numpy(float))
+    cells = pd.DataFrame(
+        {"profile_num": pp.ravel(), "depth_bin": dd.ravel(), "e": e.ravel(), "n": n.ravel()}
+    )
+    got = pdf[["profile_num", "depth_bin"]].merge(cells, how="left")
+    return got["e"].to_numpy(), got["n"].to_numpy()
+
+
+def _by_keys(pdf):
+    keys = ["profile_num", "depth_bin"]
+    return pdf.sort_values(keys, na_position="first").reset_index(drop=True)
+
+
+def test_bias_fit_apply_matches_driver_fit(spark):
+    """The executor fit reproduces the old driver path for two missions:
+    each mission's coefficient is fit_shear_bias on that mission's pivoted
+    matrices, NULL keys give NULL ADCP_E/ADCP_N, and a NaN in one
+    component gives NULL in that component only. Through Spark, calc_bias
+    keeps every row and every other column."""
+    from seaexplorertools_spark.pipeline.velocity import _bias_fit_apply, calc_bias
+
+    rng = np.random.default_rng(7)
+    layout = {"A": (np.arange(3, 11), np.arange(0, 12)), "B": (np.arange(50, 56), np.arange(2, 9))}
+    fit_apply = _bias_fit_apply()
+    frames, want = [], {}
+    for mid, (profiles, depths) in layout.items():
+        pdf = _bias_grid(rng, profiles, depths, mid)
+        e, n = _expected_bias(pdf)
+        out = fit_apply((mid,), pdf)
+        np.testing.assert_array_equal(out["ADCP_E"].to_numpy(), e)
+        np.testing.assert_array_equal(out["ADCP_N"].to_numpy(), n)
+        assert (np.isnan(e) & np.isfinite(n)).any()  # single-sided NaN cells
+        pd.testing.assert_frame_equal(
+            out.drop(columns=["ADCP_E", "ADCP_N"]), pdf.drop(columns=["ADCP_E", "ADCP_N"])
+        )
+        # rows of a NULL mission are never fitted
+        assert fit_apply((None,), pdf)[["ADCP_E", "ADCP_N"]].isna().all().all()
+        frames.append(pdf)
+        want[mid] = pdf.assign(ADCP_E=e, ADCP_N=n)
+
+    schema = (
+        "profile_num long, depth_bin long, ADCP_E double, ADCP_N double, "
+        "speed_e_g double, speed_n_g double, mission string"
+    )
+    grid = spark.createDataFrame(pd.concat(frames, ignore_index=True), schema)
+    fitted = calc_bias(grid, {"mission_col": "mission"})
+    # NaN leaves as NULL, as the old join's nan2null patch made it
+    assert fitted.filter(F.isnan("ADCP_E") | F.isnan("ADCP_N")).count() == 0
+    assert fitted.filter(F.col("ADCP_E").isNull() & F.col("ADCP_N").isNotNull()).count() > 0
+    fleet = fitted.toPandas()
+    assert len(fleet) == grid.count()
+    for mid, w in want.items():
+        got = fleet[fleet["mission"] == mid]
+        pd.testing.assert_frame_equal(_by_keys(got), _by_keys(w), check_dtype=False)
+    one = calc_bias(grid.filter(F.col("mission") == "A"), {}).toPandas()
+    assert list(one.columns) == grid.columns
+    pd.testing.assert_frame_equal(_by_keys(one), _by_keys(want["A"]), check_dtype=False)
+
+
+def test_bias_fit_ships_by_value(tmp_path):
+    """The executor function, pickled with PySpark's cloudpickle, loads and
+    runs in an isolated interpreter that cannot import this package — the
+    way a Python worker started outside the checkout sees it."""
+    import pickle
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from seaexplorertools_spark.pipeline.velocity import _bias_fit_apply
+
+    pdf = _bias_grid(np.random.default_rng(3), np.arange(1, 6), np.arange(0, 8), "A")
+    fit_apply = _bias_fit_apply()
+    script = (
+        "import importlib.util, pickle, sys\n"
+        "assert importlib.util.find_spec('seaexplorertools_spark') is None\n"
+        "fn, pdf = pickle.loads(sys.stdin.buffer.read())\n"
+        "sys.stdout.buffer.write(pickle.dumps(fn(('A',), pdf)))\n"
+    )
+    res = subprocess.run(
+        [sys.executable, "-I", "-c", script],
+        input=cloudpickle.dumps((fit_apply, pdf)),
+        capture_output=True,
+        cwd=tmp_path,
+        timeout=120,
+    )
+    assert res.returncode == 0, res.stderr.decode()
+    pd.testing.assert_frame_equal(pickle.loads(res.stdout), fit_apply(("A",), pdf))
