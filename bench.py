@@ -46,7 +46,7 @@ HEADLINE = [
     "j4_broadcast_dim",     # broadcast dim join + agg
     "w4_cumsum_reset",      # sessionized cumsum (two window passes, one sort)
     "w2_central_diff",      # np.gradient window
-    "r1_regrid_ladder",     # grouped applyInPandas regrid
+    "r1_regrid_ladder",     # carry-buffer mapInPandas regrid
     "dd_minhash_lsh_pairs", # minhash LSH dedup
     "ann_topk_bruteforce",  # brute-force cosine top-k
     "txt_quality",          # text quality features

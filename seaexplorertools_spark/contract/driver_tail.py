@@ -884,11 +884,9 @@ def q_zipf_fit(spark, sf_dir):
     """,
 )
 def st_bloom_decontam(spark, sf_dir):
-    """Batch twin of the STREAMING Bloom decontaminator
-    (streaming/decontam.py): the holdout bitset collapses to a literal
-    2 048-long array and the per-doc verdict is a stateless projection —
-    ZERO exchanges, so the identical plan runs under readStream in
-    append mode with no watermark and no state. Same math as
+    """Bloom decontamination via streaming/decontam.py: the holdout
+    bitset collapses to a literal 2 048-long array and the per-doc
+    verdict is a stateless projection — ZERO exchanges. Same math as
     dd_bloom_decontaminate (which keeps the filter as a broadcast table
     and pays one verdict shuffle); the oracle rebuilds the identical
     bitset, so the two designs are pinned to agree exactly.
@@ -898,9 +896,9 @@ def st_bloom_decontam(spark, sf_dir):
     split, which would put the md5-dense probe on one core (measured
     9.5 → 0.9 s at sf0.1 with 32). At 100 TB the input already has
     thousands of splits and the repartition is a no-op to delete; the
-    operator itself stays zero-exchange (the streaming form never
-    shuffles). Round-robin is layout-independent here — every verdict
-    is per-row — so no cross-branch cache is needed."""
+    operator itself stays zero-exchange. Round-robin is
+    layout-independent here — every verdict is per-row — so no
+    cross-branch cache is needed."""
     from ..operators.dedup import doc_shingles
     from ..operators.selection import bloom_build
     from ..streaming.decontam import bitmap_from_words, decontaminate_flags

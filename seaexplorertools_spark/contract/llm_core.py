@@ -674,8 +674,8 @@ def mm_media_features(spark, sf_dir):
     """,
 )
 def st_windowed_counts(spark, sf_dir):
-    """Tumbling-window aggregation (batch form of the Structured Streaming
-    windowed count in streaming/windowed.py; same logical plan)."""
+    """Tumbling-window aggregation: hourly buckets by integer µs
+    division, one partial-agg exchange."""
     ev = events(spark, sf_dir)
     return ev.groupBy(
         F.expr("ts_us div 3600000000").alias("hour_bucket"), "event_type"
@@ -813,10 +813,8 @@ def q_interval_join(spark, sf_dir):
     """,
 )
 def st_first_seen(spark, sf_dir):
-    """First-seen dedup per (user, event_type) — the batch twin of the
-    streaming dropDuplicatesWithinWatermark operator
-    (streaming/dedup.py; equivalence pinned by
-    tests/test_streaming_dedup.py). min_by with a (ts, id) struct key:
+    """First-seen dedup per (user, event_type) via
+    streaming/dedup.py::first_seen. min_by with a (ts, id) struct key:
     one groupBy, map-side partial min."""
     from ..streaming.dedup import first_seen
 

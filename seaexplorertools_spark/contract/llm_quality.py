@@ -56,8 +56,7 @@ def q_hopping_counts(spark, sf_dir):
     computed with INTEGER µs arithmetic rather than ``F.window`` so
     boundaries are session-timezone-proof (a :30/:45-offset zone shifts
     F.window's epoch alignment on TIMESTAMP inputs) and engine-exact.
-    Plan: 2-element explode → ONE partial-agg exchange — the batch twin
-    of streaming/windowed.py's hopping counts."""
+    Plan: 2-element explode → ONE partial-agg exchange."""
     ev = events(spark, sf_dir)
     slide = 300000000
     s1 = (F.col("ts_us") - (F.col("ts_us") % F.lit(slide))).cast("bigint")

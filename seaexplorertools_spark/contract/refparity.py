@@ -1260,16 +1260,15 @@ from ..operators.regrid import regrid_interp  # noqa: E402
 def r1_regrid_ladder(spark, sf_dir):
     """R1 — per-group isobar-style regrid (reference regridADCPdata
     :876-981): per user, interpolate event values onto a fixed ladder of
-    day-marks. Uses the measured-fastest impl (carry-buffer mapInPandas,
-    0.97 s warm at sf0.1); the pure-JVM union+window formulation is
-    result-identical (tests/test_regrid.py) and available via impl='jvm'."""
+    day-marks. Carry-buffer mapInPandas (0.97 s warm at sf0.1); ties on
+    x keep the lowest event_id, as the oracle's row_number does."""
     ev = events(spark, sf_dir).withColumn(
         "x", (F.col("ts_us") - F.lit(_T0_US)) / F.lit(1000000.0)
     )
     ladder = [k * 86400.0 for k in range(30)]
     out = regrid_interp(
         ev, ["user_id"], "x", ["value"], ladder, x_name="x_target",
-        impl="partitions", order_col="event_id"
+        order_col="event_id"
     )
     return out.select("user_id", "x_target", r6(F.col("value")).alias("value"))
 

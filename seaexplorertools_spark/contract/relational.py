@@ -336,7 +336,7 @@ def udf_trimmed_mean(spark, sf_dir):
     per-event-type 10 %-trimmed mean of value via an Arrow
     grouped-aggregate pandas UDF — the Series→scalar UDF shape, completing
     the Python-boundary family (scalar pandas_udf, grouped-map, cogrouped,
-    mapInPandas, mapInArrow, UDTF, applyInPandasWithState, and now the
+    mapInPandas, mapInArrow, UDTF, and now the
     pandas UDAF). Right boundary for order statistics with no
     sufficient-statistic split; the k = floor(n·trim) drop count is the
     identical IEEE double product in pandas and the oracle, so the kept

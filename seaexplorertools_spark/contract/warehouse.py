@@ -859,11 +859,9 @@ def ann_topk_pq(spark, sf_dir):
     """,
 )
 def st_enrich_static(spark, sf_dir):
-    """Stream-static enrichment (batch twin of the Structured Streaming
-    broadcast join in streaming/enrich.py, same logical plan): every
-    micro-batch of the unbounded side joins a small static dimension via
-    broadcast — no state store, no watermark, the canonical streaming
-    feature-enrichment shape. The dim is inline VALUES on both engines."""
+    """Stream-static enrichment shape: the fact side joins a small static
+    dimension via broadcast, so the join adds no shuffle of the facts.
+    The dim is inline VALUES on both engines."""
     dim = spark.createDataFrame(
         [
             ("view", 1.0, "passive"),

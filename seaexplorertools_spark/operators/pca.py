@@ -164,10 +164,10 @@ def gram_covariance(df: DataFrame, vec_col: str, dim: int) -> list[list[float]]:
     """Centered covariance-scatter matrix C = Σ x xᵀ − n·μμᵀ as a
     driver-side dim×dim list — computed in ONE distributed aggregation
     (explode each row's (i, j, xᵢ·xⱼ) pairs → 4096-group sum). This is
-    the right PCA regime for SMALL dim: one pass over the data and the
+    the right PCA form for SMALL dim: one pass over the data and the
     eigenproblem becomes driver-side arithmetic on dim² numbers, versus
     one distributed pass PER power iteration (power_iteration_top — the
-    right regime when dim is too large to materialize dim²)."""
+    right form when dim is too large to materialize dim²)."""
     idx = F.sequence(F.lit(0), F.lit(dim - 1))
     pairs = F.flatten(
         F.transform(
@@ -232,104 +232,3 @@ def top_component_gram(
     ]
     return spark.createDataFrame(rows, "dim int, loading double")
 
-
-def gram_covariance_arrow(df: DataFrame, vec_col: str, dim: int) -> list[list[float]]:
-    """Production Gram path: per-batch numpy ``XᵀX`` partials via
-    mapInPandas (BLAS matmul — no dim²-per-row explode materialization),
-    summed across batches by one tiny aggregate. Moves O(batches·dim²)
-    rows instead of O(N·dim²): at 100 TB this is the only Gram
-    formulation that works. Numerically it differs from the explode path
-    only in float-summation association (pairwise BLAS vs sequential);
-    the loadings agree to ~1e-9 (pinned in tests) — the exact-oracle
-    contract query keeps the explode form, this is the declared fast
-    twin."""
-    import numpy as np
-    import pandas as pd
-
-    def partials(batches):
-        for pdf in batches:
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            if len(X) == 0:
-                continue
-            G = X.T @ X
-            s = X.sum(axis=0)
-            yield pd.DataFrame(
-                {
-                    "g": [G.ravel().tolist()],
-                    "s": [s.tolist()],
-                    "n": [float(len(X))],
-                }
-            )
-
-    flat = df.select(vec_col).mapInPandas(
-        partials, "g array<double>, s array<double>, n double"
-    )
-    flat = consistency_cache(flat)  # |batches| rows; g-sum + (s,n)-sum jobs
-    # 4096 separate F.sum expressions would blow the codegen tree up;
-    # posexplode keeps it one 2-column aggregate over dim² groups
-    grows = (
-        flat.select(F.posexplode("g").alias("i", "v"))
-        .groupBy("i")
-        .agg(F.sum("v").alias("v"))
-        .collect()
-    )
-    srows = (
-        flat.select(F.posexplode("s").alias("i", "v"))
-        .groupBy("i")
-        .agg(F.sum("v").alias("v"))
-        .collect()
-    )
-    n = flat.agg(F.sum("n")).collect()[0][0]
-    g = [0.0] * (dim * dim)
-    for r in grows:
-        g[r["i"]] = r["v"]
-    s = [0.0] * dim
-    for r in srows:
-        s[r["i"]] = r["v"]
-    C = [[0.0] * dim for _ in range(dim)]
-    for i in range(dim):
-        for j in range(dim):
-            C[i][j] = g[i * dim + j] - s[i] * s[j] / n
-    return C
-
-
-# Auto regime choice: dim² driver cells the Gram path may materialize before
-# we fall back to per-iteration distributed passes. 2^22 cells ≈ 32 MB of
-# doubles — comfortable driver state; past that (dim ≳ 2048) the Gram
-# matrix itself becomes the bottleneck and power iteration's
-# one-|dim|-aggregate-per-step shape is the scalable regime.
-MAX_GRAM_CELLS = 1 << 22
-
-
-def choose_pca_regime(dim: int, max_gram_cells: int = MAX_GRAM_CELLS) -> str:
-    """'gram' when the dim×dim scatter matrix fits driver memory
-    (dim² ≤ max_gram_cells), else 'power'. Gram costs ONE distributed
-    pass total; power iteration costs one per step but never
-    materializes dim² state — the classic small-dim/large-dim split
-    (PLANS.md walkthrough, now in code instead of prose)."""
-    return "gram" if dim * dim <= max_gram_cells else "power"
-
-
-def pca_top(
-    spark: SparkSession,
-    df: DataFrame,
-    vec_col: str,
-    dim: int,
-    n_iter: int = 6,
-    regime: str = "auto",
-    max_gram_cells: int = MAX_GRAM_CELLS,
-) -> DataFrame:
-    """Top principal component, (dim, loading) rows — regime-dispatching
-    front door. ``regime='auto'`` picks the one-pass Gram path when dim²
-    fits driver memory and per-iteration power passes otherwise
-    (choose_pca_regime); 'gram'/'power' force a path. Both regimes share
-    v₀/update/sign conventions, so loadings agree to ~1e-6 (pinned in
-    tests/test_pca.py); the contract queries keep explicit regimes so
-    their oracles replay a fixed computation."""
-    if regime == "auto":
-        regime = choose_pca_regime(dim, max_gram_cells)
-    if regime == "gram":
-        return top_component_gram(spark, df, vec_col, dim, n_iter=n_iter)
-    if regime == "power":
-        return top_component_df(spark, df, vec_col, dim, n_iter=n_iter)
-    raise ValueError(f"unknown PCA regime {regime!r} (auto|gram|power)")

@@ -46,6 +46,11 @@ from pyspark.sql.window import Window
 
 from ..caching import consistency_cache
 
+# monotonically_increasing_id() keeps the record number within a partition
+# in its low 33 bits; a range partition holding more than 2^33 rows would
+# carry into the partition-id bits, so global_rank refuses it
+LOCAL_RN_BITS = 33
+
 
 def global_rank(
     df: DataFrame,
@@ -71,7 +76,11 @@ def global_rank(
     and the cross-partition property tests). Alternative designs that
     also dropped the second exchange but removed the cache or collected
     boundaries were measured this round and REJECTED
-    (plans/r10/ab_rank_lanes*.json; OPTIMIZATION_r10.md T5)."""
+    (plans/r10/ab_rank_lanes*.json; OPTIMIZATION_r10.md T5).
+
+    Limit: at most 2^``LOCAL_RN_BITS`` (2^33 ≈ 8.6e9) rows per range
+    partition; a larger partition fails the query with an error naming
+    the limit instead of returning wrong ranks (raise ``num_partitions``)."""
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     ranged = (
@@ -80,7 +89,9 @@ def global_rank(
         .withColumn("__pid", F.spark_partition_id())
         .withColumn(
             "__local_rn",
-            F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1))
+            F.monotonically_increasing_id().bitwiseAND(
+                F.lit((1 << LOCAL_RN_BITS) - 1)
+            )
             + F.lit(1),
         )
     )
@@ -94,13 +105,29 @@ def global_rank(
     counts = ranged.groupBy("__pid").agg(F.count("*").alias("__n"))
     # prefix offsets with no window at all: partition p's count lands on
     # every higher id p+1..parts-1 (ids known up front), then a hash
-    # aggregate sums contributions per target id — ≤ parts² tiny rows
+    # aggregate sums contributions per target id — ≤ parts² tiny rows.
+    # The size guard is the explode's first branch, so it runs on every
+    # count row: the last partition's row explodes to nothing, so a
+    # check on the exploded rows would never see that partition.
+    limit = 1 << LOCAL_RN_BITS
     contrib = counts.select(
         F.explode(
             F.when(
+                F.col("__n") > F.lit(limit),
+                F.raise_error(
+                    F.format_string(
+                        f"global_rank: range partition %d holds %d rows, over "
+                        f"the 2^{LOCAL_RN_BITS} = {limit} rows per partition "
+                        f"that monotonically_increasing_id can number; raise "
+                        f"num_partitions",
+                        F.col("__pid"),
+                        F.col("__n"),
+                    )
+                ),
+            ).when(
                 F.col("__pid") < F.lit(parts - 1),
                 F.sequence(F.col("__pid") + F.lit(1), F.lit(parts - 1)),
-            ).otherwise(F.lit(None).cast("array<int>"))
+            )
         ).alias("__pid"),
         F.col("__n"),
     )

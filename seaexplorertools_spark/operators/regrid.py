@@ -7,12 +7,12 @@ fixed ladder of depth offsets; implemented there as
 loop (:928-946). The offset ladder itself comes from a tiny per-bin
 aggregate + argmin (:882-916), a driver-side computation.
 
-Spark-first: ``groupBy(group).applyInPandas`` — one shuffle keyed by the
-group (ping/profile/user), Arrow-batched numpy interp inside, NaN outside
-the hull and per-value null-skipping exactly like the reference ``interp``
-(:144-146). The group key (ping time) is high-cardinality and uniform →
-this parallelizes to any cluster width; state per group is O(bins), so
-executor memory is flat at 100 TB.
+Spark-first: one shuffle keyed by the group (ping/profile/user), then a
+streaming ``mapInPandas`` with Arrow-batched numpy interp inside, NULL
+outside the hull and per-value null-skipping like the reference
+``interp`` (:144-146). The group key (ping time) is high-cardinality and
+uniform → this parallelizes to any cluster width; state per group is
+O(bins), so executor memory is flat at 100 TB.
 """
 
 from __future__ import annotations
@@ -20,7 +20,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 
@@ -31,63 +30,31 @@ def regrid_interp(
     values: list[str],
     ladder: list[float],
     x_name: str = "x_target",
-    impl: str = "partitions",
     order_col: str | None = None,
 ) -> DataFrame:
     """For each group, interpolate every ``values`` column from its (x, v)
     samples onto the fixed ``ladder`` of x targets.
 
     Output: one row per (group, ladder point); value columns keep their
-    names. Ties on x keep the first occurrence by ``order_col`` (falls back
-    to input order for the Python impls — pass ``order_col`` for a
-    deterministic result).
+    names. Per group and per value column, the semantics are the DuckDB
+    oracle's (``r1_regrid_ladder``):
 
-    Implementations (identical results, pinned by tests/test_regrid.py):
+    - samples with a non-finite x or value (NULL or NaN) are dropped
+      first, per value column;
+    - of the remaining samples, ties on x keep the first occurrence by
+      ``order_col`` (without ``order_col``, by arrival order — pass it
+      for a deterministic result);
+    - linear interpolation between neighbours, an exact hit returns the
+      sample, and a target strictly outside the samples' x range is NULL.
 
-    - ``impl='partitions'`` (default — measured winner): repartition by
-      group, sort within partitions, stream ``mapInPandas`` with a carry
-      buffer (vectorized numpy interp; amortizes the Arrow round-trip over
-      whole batches). Measured 0.97 s warm at sf0.1 (100k events / 1.5k
-      groups) and 2.0 s at 10× that — the numpy interp is vectorized, so
-      the Python path has no per-row floor in practice.
-    - ``impl='jvm'``: dedup samples with one ``min_by`` aggregate, explode
-      the ladder into probe rows, and reuse ``interp_join``'s union+window
-      machinery — whole-stage codegen end to end, NO Python worker on the
-      path. Measured 1.49 s / 2.5 s on the same workloads (two extra
-      shuffles); same linear slope. The right choice when executors run
-      without Python workers or Arrow memory is constrained.
-    - ``impl='groups'``: grouped ``applyInPandas`` (one Arrow round-trip
-      per group, ~2 ms/group overhead) — simplest, slowest on many small
-      groups.
+    Rows with a NULL group key are dropped.
+
+    Plan: repartition by group, sort within partitions by (group, x,
+    ``order_col``), then one streaming ``mapInPandas`` with a carry buffer
+    for the group that straddles two Arrow batches; the interpolation is
+    vectorized numpy per group. Measured 0.97 s warm at sf0.1 (100k
+    events / 1.5k groups) and 2.0 s at 10× that.
     """
-    if impl == "jvm":
-        from .joins import interp_join
-
-        work = df.select(
-            *group_cols,
-            F.col(x).cast("double").alias(x_name),
-            *([order_col] if order_col else []),
-            *[F.col(v).cast("double").alias(v) for v in values],
-        )
-        # NaN behaves as missing (np.isfinite semantics): NaN x drops the
-        # row, NaN values become NULL and are skipped per-column
-        for v in values:
-            work = work.withColumn(v, F.when(F.isnan(F.col(v)), None).otherwise(F.col(v)))
-        samples = work.filter(F.col(x_name).isNotNull() & ~F.isnan(F.col(x_name)))
-        ord_c = F.col(order_col) if order_col else F.col(x_name)
-        samples = samples.groupBy(*group_cols, x_name).agg(
-            *[
-                F.min_by(F.col(v), F.when(F.col(v).isNotNull(), ord_c)).alias(v)
-                for v in values
-            ]
-        )
-        probes = (
-            df.select(*group_cols)
-            .distinct()
-            .withColumn(x_name, F.explode(F.array(*[F.lit(float(o)) for o in ladder])))
-        )
-        return interp_join(samples, probes, on=x_name, values=values, partition_by=group_cols)
-
     ladder_arr = np.asarray(ladder, dtype=np.float64)
 
     fields = [df.schema[c] for c in group_cols]
@@ -96,48 +63,13 @@ def regrid_interp(
         + [StructField(x_name, DoubleType(), False)]
         + [StructField(v, DoubleType(), True) for v in values]
     )
-    work = df.select(*group_cols, x, *values)
-
-    # defined as a closure (not module-level) so cloudpickle ships it by
-    # VALUE — Spark python workers don't inherit the driver's sys.path, so
-    # a by-reference pickle of this module would fail to import there
-    def _interp_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {c: [pdf[c].iloc[0]] * len(ladder_arr) for c in group_cols}
-        out[x_name] = ladder_arr
-        xs = pdf[x].to_numpy(dtype=np.float64)
-        order = np.argsort(xs, kind="stable")
-        xs = xs[order]
-        # drop duplicate x (keep first) — mirrors the dedup in the oracle
-        keep = np.concatenate(([True], np.diff(xs) > 0))
-        xs = xs[keep]
-        for v in values:
-            ys = pdf[v].to_numpy(dtype=np.float64)[order][keep]
-            gg = np.isfinite(xs) & np.isfinite(ys)
-            if gg.sum() == 0:
-                out[v] = np.full(len(ladder_arr), np.nan)
-                continue
-            xg, yg = xs[gg], ys[gg]
-            vi = np.interp(ladder_arr, xg, yg)
-            # reference interp (:144-146): NaN strictly outside the hull
-            vi[ladder_arr < xg[0]] = np.nan
-            vi[ladder_arr > xg[-1]] = np.nan
-            out[v] = vi
-        return pd.DataFrame(out)
-
-    if impl == "groups":
-
-        def interp_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _interp_one(pdf)
-
-        return work.groupBy(*group_cols).applyInPandas(interp_group, schema)
+    order = [order_col] if order_col else []
+    work = df.select(*group_cols, x, *order, *values)
 
     def _process(body: pd.DataFrame) -> pd.DataFrame:
-        # whole-batch vectorized form of _interp_one: one preallocated
-        # array set per batch instead of one pandas frame per group +
-        # concat (the frame churn dominated on many small groups — same
-        # fix as pipeline/shear.py::regrid_cells). Per-group math is
-        # _interp_one's exactly; groups with a null key are dropped like
-        # pandas groupby(dropna=True) did.
+        # one preallocated array set per batch instead of one pandas
+        # frame per group + concat (the frame churn dominated on many
+        # small groups — same fix as pipeline/shear.py::regrid_cells)
         keyarrs = [body[c].to_numpy() for c in group_cols]
         null_key = np.zeros(len(body), dtype=bool)
         for a in keyarrs:
@@ -168,17 +100,19 @@ def regrid_interp(
         vouts = {v: np.full(total, np.nan) for v in values}
         for i in range(n_groups):
             s, e, base = starts[i], ends[i], i * lad_n
-            xs = xall[s:e]
-            order = np.argsort(xs, kind="stable")
-            xs = xs[order]
-            keep = np.concatenate(([True], np.diff(xs) > 0))
-            xs = xs[keep]
+            # rows arrive sorted by (x, order_col); the stable argsort
+            # keeps that tie order, so the first x below is the first by
+            # order_col
+            srt = np.argsort(xall[s:e], kind="stable")
+            xs = xall[s:e][srt]
             for v in values:
-                ys = vall[v][s:e][order][keep]
+                ys = vall[v][s:e][srt]
                 gg = np.isfinite(xs) & np.isfinite(ys)
-                if gg.sum() == 0:
+                if not gg.any():
                     continue
                 xg, yg = xs[gg], ys[gg]
+                keep = np.concatenate(([True], np.diff(xg) > 0))
+                xg, yg = xg[keep], yg[keep]
                 vi = np.interp(ladder_arr, xg, yg)
                 # reference interp (:144-146): NaN strictly outside the hull
                 vi[ladder_arr < xg[0]] = np.nan
@@ -211,5 +145,7 @@ def regrid_interp(
         if carry is not None and len(carry):
             yield _process(carry)
 
-    sorted_work = work.repartition(*group_cols).sortWithinPartitions(*group_cols, x)
+    sorted_work = work.repartition(*group_cols).sortWithinPartitions(
+        *group_cols, x, *order
+    )
     return sorted_work.mapInPandas(interp_partition, schema)

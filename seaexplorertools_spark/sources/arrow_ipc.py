@@ -77,7 +77,7 @@ def arrow_records(media: DataFrame) -> DataFrame:
                     for f in _FIELDS
                 }
                 for k in range(len(tbl)):
-                    # type-guard every field (mirrors dump_ds._file_rows):
+                    # type-guard every field:
                     # a payload whose score column is strings (or body
                     # non-string) degrades the FIELD to NULL instead of
                     # failing the Spark task.

@@ -195,7 +195,7 @@ def bson_records(media: DataFrame) -> DataFrame:
                 except ValueError:
                     continue
                 for v in docs:
-                    # type-guard every field (mirrors dump_ds._file_rows):
+                    # type-guard every field:
                     # a well-formed dump with a string score / bytes body
                     # must degrade the FIELD to NULL, not raise inside the
                     # Spark task (the per-payload degrade contract).

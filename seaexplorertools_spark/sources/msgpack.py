@@ -267,7 +267,7 @@ def msgpack_records(media: DataFrame) -> DataFrame:
                 for v in values:
                     if not isinstance(v, dict):
                         continue
-                    # type-guard every field (mirrors dump_ds._file_rows):
+                    # type-guard every field:
                     # a well-formed dump with a string score / bytes body
                     # must degrade the FIELD to NULL, not raise inside the
                     # Spark task (the per-payload degrade contract).

@@ -1,3 +1,1 @@
-from .decontam import decontaminate_flags, stream_decontaminate  # noqa: F401
-from .enrich import enrich, stream_enrich  # noqa: F401
-from .windowed import stream_windowed_counts, windowed_counts  # noqa: F401
+from .decontam import decontaminate_flags  # noqa: F401

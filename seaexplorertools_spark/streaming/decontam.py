@@ -1,4 +1,4 @@
-"""Streaming benchmark decontamination against a static Bloom bitset
+"""Benchmark decontamination against a static Bloom bitset
 (engine addition, SURVEY §2.10; the reference is batch-only).
 
 The production shape: documents arrive continuously (crawl ingest) and
@@ -12,25 +12,21 @@ probe is a PURE PER-ROW EXPRESSION:
 - shingle extraction, k md5 draws, and the bit tests all run inside one
   ``filter(array, lambda)`` — whole-stage codegen, zero exchanges,
   zero state;
-- stateless ⇒ works in append mode with no watermark, adds nothing to
-  the state store, and retries/micro-batch boundaries cannot change
-  results (the verdict depends only on the row and the literal bitmap).
+- stateless: the verdict depends only on the row and the literal
+  bitmap, so partitioning and retries cannot change results.
 
 Relation to ``dd_bloom_decontaminate`` (same math, different physical
 design): that query keeps the filter as a broadcastable (word_idx, word)
 TABLE — no driver state, unbounded m — and pays one per-doc shuffle for
-the verdict aggregate. This twin trades a bounded driver collect for a
-zero-shuffle plan that the streaming planner accepts unchanged. Both
-produce identical flags (pinned by the contract oracle + the
-stream==batch test).
+the verdict aggregate. This form trades a bounded driver collect for a
+zero-shuffle plan. Both produce identical flags (pinned by the
+``st_bloom_decontam`` contract oracle).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
 
 def bitmap_from_words(words: DataFrame, m_bits: int) -> list[int]:
@@ -70,7 +66,7 @@ def decontaminate_flags(
     k: int = 3,
     shingle_k: int = 3,
 ) -> DataFrame:
-    """Batch twin: per document, the count of distinct ``shingle_k``-token
+    """Per document, the count of distinct ``shingle_k``-token
     shingles whose k Bloom bits are all set, as a stateless projection.
     Output: (doc_id, n_shingles, n_flagged, is_contaminated)."""
     from ..operators.dedup import shingles_from_tokens, tokens
@@ -100,16 +96,3 @@ def decontaminate_flags(
         (F.col("n_flagged") > 0).alias("is_contaminated"),
     )
 
-
-def stream_decontaminate(
-    spark: SparkSession,
-    path: str,
-    bitmap: list[int],
-    m_bits: int = 65536,
-    k: int = 3,
-    schema: str = DOC_SCHEMA,
-) -> DataFrame:
-    """``readStream`` form of the same projection — stateless, append-mode
-    ready, no watermark required."""
-    stream = spark.readStream.schema(schema).parquet(path)
-    return decontaminate_flags(stream, bitmap, m_bits, k)

@@ -1,31 +1,16 @@
-"""Streaming deduplication — first-seen-per-key over an unbounded stream
-(engine addition; the batch twin is oracle-checked as ``st_first_seen``).
+"""First-seen-per-key deduplication (engine addition; oracle-checked as
+``st_first_seen``).
 
-Training-data ingestion is a stream of documents/events where the same
-logical record arrives repeatedly (retries, re-crawls, at-least-once
-sources). The dedup decision must be made online with bounded state:
-
-- ``first_seen``          — batch form: min-by event time per key
-  (deterministic tiebreak on a unique id).
-- ``stream_first_seen``   — ``readStream`` + ``dropDuplicatesWithinWatermark``:
-  keeps the first arrival per key and EVICTS state once the watermark
-  passes, so state is O(keys per watermark window), not O(all keys ever)
-  — the property that keeps this runnable forever at ingest scale.
-
-Equivalence: streaming keeps the first *arrival*; the batch twin keeps the
-first *event time*. They agree when arrival order respects event time
-(tests/test_streaming_dedup.py feeds a time-sorted file to pin this).
+Training-data ingestion sees the same logical record many times
+(retries, re-crawls, at-least-once sources). ``first_seen`` keeps the
+earliest event per key by event time, with a deterministic tiebreak on a
+unique id, in one ``groupBy`` with ``min_by`` — no window and no sort.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-EVENTS_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
 
 
 def first_seen(
@@ -34,7 +19,7 @@ def first_seen(
     time_col: str = "ts",
     tiebreak_col: str = "event_id",
 ) -> DataFrame:
-    """Batch twin: the earliest event per key, deterministic via
+    """The earliest event per key, deterministic via
     (time, tiebreak) min-by. One groupBy — shuffle volume = |rows|,
     map-side partial min applies."""
     ordered = F.struct(F.col(time_col), F.col(tiebreak_col))
@@ -42,18 +27,3 @@ def first_seen(
     agg = [F.min_by(F.col(c), ordered).alias(c) for c in others]
     return events.groupBy(*key_cols).agg(*agg).select(*events.columns)
 
-
-def stream_first_seen(
-    spark: SparkSession,
-    path: str,
-    key_cols: list[str],
-    schema: str = EVENTS_SCHEMA,
-    time_col: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming dedup with bounded state: first arrival per key wins;
-    keys older than the watermark are evicted from the state store."""
-    stream = spark.readStream.schema(schema).parquet(path)
-    return stream.withWatermark(time_col, watermark).dropDuplicatesWithinWatermark(
-        key_cols
-    )

@@ -75,60 +75,3 @@ def test_gram_and_power_paths_agree(spark, sf_dir):
     for i in range(64):
         assert abs(power[i] - gram[i]) <= 2e-6, (i, power[i], gram[i])
 
-
-def test_gram_arrow_twin_matches_explode_path(spark, sf_dir):
-    import math
-
-    from pyspark.sql import functions as F
-
-    from seaexplorertools_spark.operators.pca import (
-        gram_covariance,
-        gram_covariance_arrow,
-    )
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        F.col("embedding").cast("array<double>").alias("v")
-    )
-    C1 = gram_covariance(e, "v", 64)
-    C2 = gram_covariance_arrow(e, "v", 64)
-    # identical up to float-summation association (BLAS pairwise vs hash-agg)
-    scale = max(abs(C1[i][j]) for i in range(64) for j in range(64))
-    for i in range(64):
-        for j in range(64):
-            assert math.isclose(C1[i][j], C2[i][j], rel_tol=1e-9, abs_tol=scale * 1e-12)
-
-
-def test_pca_regime_switch_point():
-    """auto = gram exactly while dim² fits the driver budget, power after."""
-    from seaexplorertools_spark.operators.pca import (
-        MAX_GRAM_CELLS,
-        choose_pca_regime,
-    )
-
-    edge = int(MAX_GRAM_CELLS ** 0.5)  # 2048 at the default budget
-    assert edge * edge == MAX_GRAM_CELLS
-    assert choose_pca_regime(edge) == "gram"
-    assert choose_pca_regime(edge + 1) == "power"
-    assert choose_pca_regime(64) == "gram"
-    assert choose_pca_regime(4096) == "power"
-    # explicit budget override moves the switch point with it
-    assert choose_pca_regime(64, max_gram_cells=63 * 63) == "power"
-
-
-def test_pca_top_auto_dispatch_matches_forced_regimes(spark, sf_dir):
-    """pca_top('auto') must equal the regime it dispatches to, and both
-    forced regimes agree on the embeddings fixture (same conventions)."""
-    from seaexplorertools_spark.operators.pca import choose_pca_regime, pca_top
-
-    from pyspark.sql import functions as F
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        F.col("embedding").cast("array<double>").alias("v")
-    )
-    assert choose_pca_regime(64) == "gram"
-    auto = {r["dim"]: r["loading"] for r in pca_top(spark, e, "v", 64).collect()}
-    gram = {r["dim"]: r["loading"] for r in pca_top(spark, e, "v", 64, regime="gram").collect()}
-    power = {r["dim"]: r["loading"] for r in pca_top(spark, e, "v", 64, regime="power").collect()}
-    assert auto == gram
-    for i in range(64):
-        assert abs(auto[i] - power[i]) <= 2e-6, (i, auto[i], power[i])

@@ -1,12 +1,14 @@
 """Distributed global rank (operators/rank.py): exact equality with the
-single-partition row_number, determinism across partition counts, and the
-no-global-window plan property."""
+single-partition row_number, determinism across partition counts, the
+no-global-window plan property, and the per-partition size guard."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from seaexplorertools_spark.operators import rank
 from seaexplorertools_spark.operators.rank import global_rank
 
 
@@ -50,6 +52,28 @@ def test_global_rank_plan_has_single_shuffle_no_window(spark, sf_dir):
         for kind in ("Project", "Sort", "Exchange")
     }
     assert idx["Project"] < idx["Sort"] < idx["Exchange"], cached[:800]
+
+
+def test_global_rank_guard_single_partition(spark, monkeypatch):
+    """The only partition is also the last one, whose count row the
+    prefix explode drops: the guard must still see it."""
+    monkeypatch.setattr(rank, "LOCAL_RN_BITS", 2)
+    df = spark.range(10).withColumnRenamed("id", "k")
+    with pytest.raises(Exception, match=r"partition 0 holds 10 rows, over the 2\^2 = 4"):
+        global_rank(df, ["k"], num_partitions=1).collect()
+
+
+def test_global_rank_guard_two_partitions(spark, monkeypatch):
+    """Two range partitions: filled exactly to the limit the ranks stay
+    exact; one row more per partition, the last partition included,
+    fails the query."""
+    monkeypatch.setattr(rank, "LOCAL_RN_BITS", 2)
+    full = spark.range(8).withColumnRenamed("id", "k")
+    got = sorted((r["k"], r["rank"]) for r in global_rank(full, ["k"], num_partitions=2).collect())
+    assert got == [(i, i + 1) for i in range(8)]
+    over = spark.range(10).withColumnRenamed("id", "k")
+    with pytest.raises(Exception, match=r"holds 5 rows, over the 2\^2 = 4"):
+        global_rank(over, ["k"], num_partitions=2).collect()
 
 
 def test_global_cumsum_matches_naive_window(spark, sf_dir):

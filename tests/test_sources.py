@@ -340,30 +340,3 @@ def test_python_datasource_netcdf3(spark):
             .count()
         )
         assert 0 < n < 12
-
-
-def test_csv_quarantine_roundtrip(spark, tmp_path):
-    from seaexplorertools_spark.sources.csvq import (
-        EVENTS_CSV_SCHEMA,
-        good_corrupt_split,
-        read_csv_quarantine,
-    )
-
-    p = tmp_path / "ev.csv"
-    p.write_text(
-        "event_id,user_id,event_type,value\n"
-        "1,10,click,0.5\n"
-        "2,11,view,1.25\n"
-        "not,a,valid,row,at,all\n"      # wrong arity -> quarantined
-        "3,twelve,signup,2.0\n"         # bad long -> quarantined
-        "4,13,purchase,\n"              # missing value -> NULL, still good
-    )
-    df = read_csv_quarantine(spark, str(p), EVENTS_CSV_SCHEMA)
-    good, bad = good_corrupt_split(df)
-    g = {r["event_id"]: r for r in good.collect()}
-    assert set(g) == {1, 2, 4}
-    assert g[4]["value"] is None  # missing field is data, not corruption
-    quarantined = [r["_corrupt_record"] for r in bad.collect()]
-    assert len(quarantined) == 2
-    assert any(q.startswith("not,a,valid") for q in quarantined)
-    assert any(q.startswith("3,twelve") for q in quarantined)

@@ -1,10 +1,8 @@
-"""Streaming Bloom decontamination == its batch twin on the same files:
-the probe is a stateless projection (zero exchanges), so an
-availableNow catch-up run must reproduce the batch flags exactly."""
+"""Bloom decontamination (streaming/decontam.py): the probe is a
+stateless projection with zero exchanges, and a holdout document is
+always flagged."""
 
 from __future__ import annotations
-
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -13,7 +11,6 @@ from seaexplorertools_spark.operators.selection import bloom_build
 from seaexplorertools_spark.streaming.decontam import (
     bitmap_from_words,
     decontaminate_flags,
-    stream_decontaminate,
 )
 
 
@@ -27,34 +24,14 @@ def _bitmap(spark, sf_dir):
     return docs, bitmap_from_words(bloom_build(hold, "tok", 65536, 3), 65536)
 
 
-def test_stream_matches_batch_and_is_stateless(spark, sf_dir):
+def test_flags_are_a_pure_projection(spark, sf_dir):
     docs, bm = _bitmap(spark, sf_dir)
     train = docs.filter(F.col("doc_id") % 50 != 0)
 
-    batch_df = decontaminate_flags(train, bm)
-    plan = batch_df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan  # streaming-safe: pure projection
-
-    batch = {r["doc_id"]: (r["n_shingles"], r["n_flagged"]) for r in batch_df.collect()}
-    assert any(f > 0 for _, f in batch.values())  # fixture has contamination
-
-    with tempfile.TemporaryDirectory() as tmp:
-        src = f"{tmp}/docs"
-        train.write.mode("overwrite").parquet(src)
-        q = (
-            stream_decontaminate(spark, src, bm)
-            .writeStream.format("memory")
-            .queryName("decontam")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {
-            r["doc_id"]: (r["n_shingles"], r["n_flagged"])
-            for r in spark.sql("SELECT * FROM decontam").collect()
-        }
-    assert got == batch
+    flags = decontaminate_flags(train, bm)
+    plan = flags._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert any(r["n_flagged"] > 0 for r in flags.collect())  # fixture has contamination
 
 
 def test_no_false_negatives_on_holdout_reinjection(spark, sf_dir):

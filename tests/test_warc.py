@@ -88,3 +88,30 @@ def test_distributed_lane_mixed(spark):
         assert recs[1]["body"] == "hello" and recs[1]["target_uri"] == "http://x/y"
         assert recs[1]["content_length"] == 5
     assert 3 not in by  # malformed: zero rows, job survives
+
+
+def test_split_http_response_edges():
+    from seaexplorertools_spark.operators.warc import split_http_response
+
+    ok = split_http_response(
+        b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
+        b"content-type: dup ignored\r\nBadLine\r\n\r\nbody\r\nwith crlf"
+    )
+    assert ok[0] == 200
+    assert ok[1]["content-type"] == "text/html"  # first wins, lowercased
+    assert ok[2] == b"body\r\nwith crlf"  # payload CRLFs preserved
+    assert split_http_response(b"not http") is None
+    assert split_http_response(b"HTTP/1.1 abc\r\n\r\nx") is None
+    assert split_http_response(b"HTTP/1.1 200 OK\r\nno terminator") is None
+
+
+def test_warc_http_lane_drops_non_http_and_warcinfo(spark):
+    from seaexplorertools_spark.operators.warc import (
+        documents_as_warc,
+        warc_http_records,
+    )
+
+    docs = spark.createDataFrame([(1, "plain body")], "doc_id long, text string")
+    # documents_as_warc writes BARE text bodies (no HTTP framing):
+    # the HTTP lane must produce zero rows for them
+    assert warc_http_records(documents_as_warc(docs)).count() == 0
