@@ -210,10 +210,8 @@ def _mission_e2e(spark) -> dict:
         try:
             _noop(gridded)  # materialize the cache = the shear stage
             # Stage-boundary lineage truncation at the shear→grid/velocity
-            # seam via the LIBRARY's public helper (round-10: moved out of
-            # this harness into pipeline.stage_boundary per the round-9
-            # VERDICT — same technique combine_missions uses; its cost is
-            # still charged to the shear stage).
+            # seam via the library's pipeline.stage_boundary; its cost is
+            # charged to the shear stage.
             gridded_t = stage_boundary(gridded)
             ping_aug = stage_boundary(ping_aug)
             t1 = time.time()
@@ -253,9 +251,8 @@ def _mission_e2e(spark) -> dict:
 
 def _fleet_e2e(spark, n_missions: int = 8) -> dict:
     """Compact fleet point (round-9 VERDICT task 1): the full pipeline
-    over N missions — per-mission shear submitted concurrently, ONE
-    combined grid+velocity DAG with mission_col — measured as warmup +
-    a single timed run (the full 1/8/32 curve with medians lives in
+    over N missions — one keyed plan per stage with mission_col —
+    measured as warmup + a single timed run (the full 1/8/32 curve with medians lives in
     scripts/fleet_bench.py; this keeps the driver bench bounded).
     Parity of the composition is pinned by
     tests/test_pipeline_scale.py::test_fleet_full_pipeline_parity."""

@@ -3,21 +3,14 @@
 parallelism axis is missions" instead of asserting it.
 
 Architecture under test (the same composition tests/test_pipeline_scale.py
-pins for correctness): the SHEAR stage runs per mission — its inputs are
-per-mission scalar attrs (cell size, blanking distance) and it ends in
-two driver-boundary scalars of its own (orientation detect, the regrid
-depth-offset ladder), so one shear DAG per mission is the semantics, not
-a limitation. The N shear DAGs are submitted CONCURRENTLY from driver
-threads (Spark job scheduling interleaves their tasks across the
-executor pool — on a cluster this is exactly N missions filling the
-fleet). The per-mission frames are then combined by
-``pipeline.combine_missions`` (mission tag + bounded-partition union +
-eager lineage truncation — see pipeline/fleet.py for the measured
-plan-explosion rationale) and the heavy GRID + VELOCITY stages run as
-ONE combined DAG with ``mission_col`` partitioning and bucketed interp
-joins.
+pins for correctness): a fleet is ONE keyed set of sources — each input
+table holds every mission, tagged with a ``mission`` column — and the
+whole pipeline runs as one lazy plan per stage with
+``options['mission_col']`` keying every join, window and shuffle:
+shear → ``stage_boundary`` → grid → velocity. One mission is a fleet of
+one; no per-mission plan is ever built.
 
-If the per-mission windows/joins really partition by mission, wall time
+If the keyed windows/joins really partition by mission, wall time
 should stay near-flat while N scales — the single-mission scheduling
 floor (velocity's ~20 sequential tiny stages) amortizes across the
 fleet. A slope near N would mean the engine serializes missions: the
@@ -38,43 +31,41 @@ import json
 import os
 import sys
 import time
-from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_DIVES = 20
 BUCKET_US = 3600e6  # 1 h — far above the ~10 s sample gap, so exact
-SHEAR_THREADS = 8  # concurrent per-mission shear submissions
 
 
 def _noop(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def build_fleet(spark, n_missions: int) -> list[dict]:
+def build_fleet(spark, n_missions: int) -> dict:
     """N distinct 20-dive missions (seeded fixtures, mission-unique
-    profile_number ranges). Driver-side pandas — excluded from the
-    timed section. Frames carry NO mission tag (per-mission shear sees
-    exactly what a solo run sees); the tag is added at the union."""
+    profile_number ranges) as one keyed set of sources: each input's
+    pandas frames concatenated with a ``mission`` column, then one
+    ``createDataFrame`` per input. Driver-side pandas — excluded from the
+    timed section. ``attrs`` is shared: every fixture mission has the same
+    cell size and blanking distance."""
+    import pandas as pd
+
     from tests.mission_fixture import make_mission
 
-    fleet = []
+    parts = {"glider": [], "ping": [], "cells": [], "bt": []}
     for k in range(n_missions):
         glider_pd, ping_pd, cells_pd, bt_pd, attrs = make_mission(
             n_dives=N_DIVES, seed=7 + k
         )
-        glider_pd = glider_pd.copy()
-        glider_pd["profile_number"] += 1000 * k
-        fleet.append(
-            {
-                "k": k,
-                "glider": spark.createDataFrame(glider_pd),
-                "ping": spark.createDataFrame(ping_pd),
-                "cells": spark.createDataFrame(cells_pd),
-                "bt": spark.createDataFrame(bt_pd),
-                "attrs": attrs,
-            }
-        )
+        glider_pd = glider_pd.assign(profile_number=glider_pd["profile_number"] + 1000 * k)
+        for name, pdf in zip(parts, (glider_pd, ping_pd, cells_pd, bt_pd)):
+            parts[name].append(pdf.assign(mission=k))
+    fleet = {
+        name: spark.createDataFrame(pd.concat(frames, ignore_index=True))
+        for name, frames in parts.items()
+    }
+    fleet["attrs"] = attrs
     return fleet
 
 
@@ -83,59 +74,35 @@ def base_options():
 
     options = default_options()
     options["correctADCPHeading"] = False
-    # bucketed interp joins in the per-mission shear too: the windows
-    # partition by time bucket instead of going global (zero
-    # unpartitioned-window warnings fleet-wide), and the bucket is far
-    # above the sample gap so results are exact (parity-pinned)
+    options["mission_col"] = "mission"
+    # bucketed interp joins: the windows partition by (mission, time
+    # bucket), and the bucket is far above the sample gap so results are
+    # exact (parity-pinned)
     options["interp_bucket"] = BUCKET_US
     return options
 
 
-def run_fleet(spark, fleet: list[dict], timed: bool = True):
+def run_fleet(spark, fleet: dict, timed: bool = True):
     """One full fleet pass. Returns (wall, stages) when ``timed``, else
-    the combined velocity DataFrame (parity mode)."""
+    the keyed velocity grid as pandas (parity mode)."""
     from seaexplorertools_spark.caching import release_consistency_caches
     from seaexplorertools_spark.pipeline import (
-        combine_missions,
         grid_shear,
         shear_from_adcp,
+        stage_boundary,
         velocity_from_shear,
     )
 
+    glider, bt = fleet["glider"], fleet["bt"]
     t0 = time.time()
-
-    def shear_one(m: dict):
-        gridded, ping_aug, opts = shear_from_adcp(
-            m["cells"], m["ping"], m["glider"], m["attrs"], base_options()
-        )
-        gridded = gridded.cache()
-        _noop(gridded)  # materialize: the shear stage's compute
-        return gridded, ping_aug, opts
-
-    with ThreadPoolExecutor(max_workers=min(len(fleet), SHEAR_THREADS)) as ex:
-        sheared = list(ex.map(shear_one, fleet))
-    t1 = time.time()
-
-    # Union + lineage truncation (pipeline/fleet.py): the naive union of
-    # N deep shear lineages is the measured scale-killer — 183 s velocity
-    # / 40 s grid at N=32 of pure driver plan re-analysis, vs 14 s / 3 s
-    # after combine_missions' eager localCheckpoint. The combine stage
-    # also materializes ping_aug's lineage ONCE (previously recomputed
-    # inside every downstream consumer).
-    combined = combine_missions(
-        [
-            {"gridded": g, "ping_aug": p, "glider": m["glider"], "bt": m["bt"]}
-            for (g, p, _), m in zip(sheared, fleet)
-        ],
-        mission_ids=[m["k"] for m in fleet],
+    gridded, ping_aug, opts = shear_from_adcp(
+        fleet["cells"], fleet["ping"], glider, fleet["attrs"], base_options()
     )
-    gridded, ping_aug = combined["gridded"], combined["ping_aug"]
-    glider, bt = combined["glider"], combined["bt"]
+    # the shear stage's compute, materialized once at the seam
+    gridded = stage_boundary(gridded)
+    t1 = time.time()
+    ping_aug = stage_boundary(ping_aug)
     t1b = time.time()
-    opts = dict(sheared[0][2])
-    opts["mission_col"] = "mission"
-    opts["interp_bucket"] = BUCKET_US
-
     try:
         if not timed:
             out = velocity_from_shear(gridded, ping_aug, glider, bt, opts)
@@ -147,12 +114,10 @@ def run_fleet(spark, fleet: list[dict], timed: bool = True):
         _noop(velocity_from_shear(gridded, ping_aug, glider, bt, opts))
         t3 = time.time()
     finally:
-        for g, _, _ in sheared:
-            g.unpersist()
         release_consistency_caches()
     return t3 - t0, {
         "shear": t1 - t0,
-        "combine": t1b - t1,
+        "boundary": t1b - t1,
         "grid": t2 - t1b,
         "velocity": t3 - t2,
     }
@@ -181,30 +146,38 @@ def time_fleet(spark, sizes: list[int], runs: int = 3) -> dict:
 
 
 def parity(spark) -> int:
-    """2-mission fleet (bt included) vs each solo run at the reference
-    e2e tolerance (atol=1e-7, rtol=1e-3) — the full-pipeline twin of
-    tests/test_pipeline_scale.py's velocity-stage parity."""
+    """2-mission keyed fleet (bt included) vs each mission's solo run
+    (unkeyed, no bucket) at the reference e2e tolerance (atol=1e-7,
+    rtol=1e-3) — the full-pipeline twin of tests/test_pipeline_scale.py."""
     import numpy as np
+    from pyspark.sql import functions as F
 
     from seaexplorertools_spark.pipeline import (
+        default_options,
         shear_from_adcp,
         velocity_from_shear,
     )
 
     fleet = build_fleet(spark, 2)
     solo = {}
-    for m in fleet:
+    for k in range(2):
+        one = {
+            name: fleet[name].filter(F.col("mission") == k).drop("mission")
+            for name in ("glider", "ping", "cells", "bt")
+        }
+        options = default_options()
+        options["correctADCPHeading"] = False
         gridded, ping_aug, opts = shear_from_adcp(
-            m["cells"], m["ping"], m["glider"], m["attrs"], base_options()
+            one["cells"], one["ping"], one["glider"], fleet["attrs"], options
         )
-        out = velocity_from_shear(gridded, ping_aug, m["glider"], m["bt"], opts)
+        out = velocity_from_shear(gridded, ping_aug, one["glider"], one["bt"], opts)
         for r in out.select("profile_num", "depth_bin", "ADCP_E", "ADCP_N").collect():
             if r["profile_num"] is not None and r["depth_bin"] is not None:
-                solo[(r["profile_num"], r["depth_bin"])] = (r["ADCP_E"], r["ADCP_N"])
+                solo[(k, r["profile_num"], r["depth_bin"])] = (r["ADCP_E"], r["ADCP_N"])
 
     got_pd = run_fleet(spark, fleet, timed=False)
     got = {
-        (r.profile_num, r.depth_bin): (r.ADCP_E, r.ADCP_N)
+        (r.mission, r.profile_num, r.depth_bin): (r.ADCP_E, r.ADCP_N)
         for r in got_pd.itertuples()
         if r.profile_num is not None and r.depth_bin is not None
     }
@@ -243,9 +216,8 @@ def main() -> int:
         "unit": "sec",
         "missions": fleet,
         "n_dives_per_mission": N_DIVES,
-        "mode": "warm (1 warmup + median of 3; per-mission shear submitted "
-        "concurrently, combined grid+velocity with mission_col + bucketed "
-        "interp joins; bottom track included)",
+        "mode": "warm (1 warmup + median of 3; one keyed plan per stage "
+        "with mission_col + bucketed interp joins; bottom track included)",
     }
     print(json.dumps(record))
     return 0

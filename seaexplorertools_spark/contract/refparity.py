@@ -900,7 +900,9 @@ def f2_beam_depth(spark, sf_dir):
     top-mounted orientation): Depth − range·cos(θ_beam(pitch, roll))."""
     ch = _channels(spark, sf_dir)
     cols = [
-        M.beam_cell_depth(F.col("depth"), F.col("rng"), F.col("pitch"), F.col("roll"), b).alias(f"d{b}")
+        M.beam_cell_depth(
+            F.col("depth"), F.col("rng"), F.col("pitch"), F.col("roll"), b, F.lit(1.0)
+        ).alias(f"d{b}")
         for b in (1, 2, 3, 4)
     ]
     return ch.select("l_orderkey", "l_linenumber", *[r6(c).alias(f"d{i+1}") for i, c in enumerate(cols)])
@@ -982,7 +984,7 @@ def f4_three_beam_xyz(spark, sf_dir):
     error-zero combination :1018, :1026-1028)."""
     ch = _channels(spark, sf_dir)
     xyz = M.xyz_from_3beam(
-        F.col("b1"), F.col("b2"), F.col("b3"), F.col("b4"), F.col("pitch"), top_mounted=True
+        F.col("b1"), F.col("b2"), F.col("b3"), F.col("b4"), F.col("pitch"), F.lit(1.0)
     )
     return ch.select(
         "l_orderkey", "l_linenumber",
@@ -1022,7 +1024,7 @@ def f5_enu_rotation(spark, sf_dir):
     ch = _channels(spark, sf_dir)
     heading = M.wrap360(F.col("pitch") * 29.0)
     enu = M.xyz_to_enu(
-        F.col("b1"), F.col("b2"), F.col("b3"), heading, F.col("pitch"), F.col("roll"), top_mounted=True
+        F.col("b1"), F.col("b2"), F.col("b3"), heading, F.col("pitch"), F.col("roll"), F.lit(1.0)
     )
     return ch.select(
         "l_orderkey", "l_linenumber",
@@ -1102,7 +1104,7 @@ def f10_mag_heading(spark, sf_dir):
     ch = _channels(spark, sf_dir)
     coeffs = [1.02, 0.03, 0.01, 0.02, 0.98, 0.04, 0.01, 0.02, 1.01, 0.1, 0.02, 0.05]
     mx, my, mz = M.calibrate_mag(F.col("b1"), F.col("b2"), F.col("b3"), coeffs)
-    hdg = M.mag_heading(mx, my, mz, F.col("pitch"), F.col("roll"))
+    hdg = M.mag_heading(mx, my, mz, F.col("pitch"), F.col("roll"), F.lit(1.0))
     return ch.select("l_orderkey", "l_linenumber", r6(hdg).alias("heading"))
 
 

@@ -51,31 +51,31 @@ THETA_FORE = 47.5  # beams 1/3 angle from Z (:991)
 THETA_SIDE = 25.0  # beams 2/4 angle from Z (:992)
 
 
-def beam_theta(pitch: Column, roll: Column, beam: int, top_mounted: bool = True) -> Column:
+def beam_theta(pitch: Column, roll: Column, beam: int, sign: Column) -> Column:
     """Angle of beam axis from vertical, radians (reference :227-237).
 
     theta_b = arccos(cos(deg2rad(angle ∓ tilt)) * cos(deg2rad(other_tilt)))
-    with the ∓ sign flipped between top- and bottom-mounted instruments.
+    with the ∓ sign flipped between top- and bottom-mounted instruments;
+    ``sign`` is the mount sign (+1 top, −1 bottom).
     """
-    s = 1.0 if top_mounted else -1.0
     if beam == 1:
-        return F.acos(cosd(F.lit(THETA_FORE) - s * pitch) * cosd(roll))
+        return F.acos(cosd(F.lit(THETA_FORE) - pitch * sign) * cosd(roll))
     if beam == 2:
-        return F.acos(cosd(F.lit(THETA_SIDE) - s * roll) * cosd(pitch))
+        return F.acos(cosd(F.lit(THETA_SIDE) - roll * sign) * cosd(pitch))
     if beam == 3:
-        return F.acos(cosd(F.lit(THETA_FORE) + s * pitch) * cosd(roll))
+        return F.acos(cosd(F.lit(THETA_FORE) + pitch * sign) * cosd(roll))
     if beam == 4:
-        return F.acos(cosd(F.lit(THETA_SIDE) + s * roll) * cosd(pitch))
+        return F.acos(cosd(F.lit(THETA_SIDE) + roll * sign) * cosd(pitch))
     raise ValueError(beam)
 
 
 def beam_cell_depth(
-    depth: Column, along_beam_range: Column, pitch: Column, roll: Column, beam: int, top_mounted: bool = True
+    depth: Column, along_beam_range: Column, pitch: Column, roll: Column, beam: int, sign: Column
 ) -> Column:
     """True depth of a (ping, bin) cell for one beam (reference remapADCPdepth
-    :243-270): Depth − direction · range · cos(theta_beam)."""
-    direction = 1.0 if top_mounted else -1.0
-    return depth - F.lit(direction) * along_beam_range * F.cos(beam_theta(pitch, roll, beam, top_mounted))
+    :243-270): Depth − direction · range · cos(theta_beam), direction being
+    the mount sign."""
+    return depth - sign * along_beam_range * F.cos(beam_theta(pitch, roll, beam, sign))
 
 
 # ---------------------------------------------------------------------------
@@ -133,13 +133,13 @@ def _b(t_deg: float) -> float:
 
 
 def xyz_from_3beam(
-    v1: Column, v2: Column, v3: Column, v4: Column, pitch: Column, top_mounted: bool = True
+    v1: Column, v2: Column, v3: Column, v4: Column, pitch: Column, sign: Column
 ) -> list[Column]:
     """3-beam XYZ solution (reference calcXYZfrom3beam :984-1034).
 
     The fore/aft beam pointing into the glider's wake is replaced by the
     error-zero solution ``(2b(ts)V2 + 2b(ts)V4 − 2b(tf)V_good) / 2b(tf)``
-    (:1018), selected by pitch sign and mount orientation (:1020-1031); then
+    (:1018), selected by pitch sign and the mount sign (:1020-1031); then
     X = a(tf)(V1−V3), Y = −a(ts)V2 + a(ts)V4, Z = 2b(ts)(V2+V4) (:1033-1035).
     """
     a_tf, a_ts = _a(THETA_FORE), _a(THETA_SIDE)
@@ -151,12 +151,13 @@ def xyz_from_3beam(
         ) / F.lit(2 * b_tf)
 
     upcast = pitch > 0
-    if top_mounted:
-        v1_eff = F.when(~upcast, replaced_by(v3)).otherwise(v1)
-        v3_eff = F.when(upcast, replaced_by(v1)).otherwise(v3)
-    else:
-        v1_eff = F.when(upcast, replaced_by(v3)).otherwise(v1)
-        v3_eff = F.when(~upcast, replaced_by(v1)).otherwise(v3)
+    top = sign > 0
+    v1_eff = F.when(
+        top, F.when(~upcast, replaced_by(v3)).otherwise(v1)
+    ).otherwise(F.when(upcast, replaced_by(v3)).otherwise(v1))
+    v3_eff = F.when(
+        top, F.when(upcast, replaced_by(v1)).otherwise(v3)
+    ).otherwise(F.when(~upcast, replaced_by(v1)).otherwise(v3))
 
     x = F.lit(a_tf) * v1_eff - F.lit(a_tf) * v3_eff
     y = F.lit(-a_ts) * v2 + F.lit(a_ts) * v4
@@ -176,13 +177,12 @@ def xyz_to_enu(
     heading: Column,
     pitch: Column,
     roll: Column,
-    top_mounted: bool = True,
+    sign: Column,
 ) -> list[Column]:
     """Per-row 3×3 rotation (reference M_xyz2enu :1134-1146): nine trig
     products as codegen expressions; the BT per-row Python loop (:1583-1584)
-    vectorizes away. ``direction`` applies the mount sign to Y and Z
-    (:1156-1158)."""
-    d = F.lit(1.0 if top_mounted else -1.0)
+    vectorizes away. ``sign`` (the reference's ``direction``) applies the
+    mount sign to Y and Z (:1156-1158)."""
     hh = F.radians(heading - F.lit(90.0))
     pp = F.radians(pitch)
     rr = F.radians(roll)
@@ -190,7 +190,7 @@ def xyz_to_enu(
     cp, sp = F.cos(pp), F.sin(pp)
     cr, sr = F.cos(rr), F.sin(rr)
 
-    yd, zd = y * d, z * d
+    yd, zd = y * sign, z * sign
     e = (ch * cp) * x + (-ch * sp * sr + sh * cr) * yd + (-ch * sp * cr - sh * sr) * zd
     n = (-sh * cp) * x + (sh * sp * sr + ch * cr) * yd + (sh * sp * cr - ch * sr) * zd
     u = sp * x + (cp * sr) * yd + (cp * cr) * zd
@@ -262,11 +262,12 @@ def backscatter_correction(amplitude: Column, alpha: Column, beam_range: Column)
 
 
 def calibrate_mag(
-    mx: Column, my: Column, mz: Column, coeffs: list[float]
+    mx: Column, my: Column, mz: Column, coeffs: list[float | Column]
 ) -> list[Column]:
     """out = A @ (v − B) with 3×3 soft-iron A (coeffs[:9]) and hard-iron
-    offset B (coeffs[9:12]) — reference calibrate :375-387, driver-fit via
-    scipy fmin (O1)."""
+    offset B (coeffs[9:12]) — reference calibrate :375-387, fitted by
+    scipy-style fmin (O1). A coefficient may be a float or a Column
+    (``F.lit`` passes a Column through)."""
     a = coeffs[:9]
     b = coeffs[9:12]
     vx, vy, vz = mx - F.lit(b[0]), my - F.lit(b[1]), mz - F.lit(b[2])
@@ -278,11 +279,12 @@ def calibrate_mag(
 
 
 def mag_heading(
-    mx: Column, my: Column, mz: Column, pitch: Column, roll: Column, sign: float = 1.0
+    mx: Column, my: Column, mz: Column, pitch: Column, roll: Column, sign: Column
 ) -> Column:
     """Tilt-compensated magnetic heading (reference heading/rot_x/rot_y
-    :367-373): wrap(atan2d(rot_x, rot_y) − 90)."""
-    my_s, mz_s = F.lit(sign) * my, F.lit(sign) * mz
+    :367-373): wrap(atan2d(rot_x, rot_y) − 90); ``sign`` is the mount
+    sign applied to the Y and Z field components."""
+    my_s, mz_s = sign * my, sign * mz
     rx = mx * cosd(pitch) + my_s * sind(roll) * sind(pitch) + mz_s * cosd(roll) * sind(pitch)
     ry = my_s * cosd(roll) - mz_s * sind(roll)
     return wrap360(atan2d(rx, ry) - F.lit(90.0))

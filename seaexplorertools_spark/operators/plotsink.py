@@ -1,6 +1,6 @@
 """Plot sink — S7, the last open reference surface: ~30 % of
-process_adcp.py is diagnostic plotting gated by ``options
-['debug_plots']`` and saved via ``save_plot(plot_dir, plot_name)``
+process_adcp.py is diagnostic plotting, saved via
+``save_plot(plot_dir, plot_name)``
 (process_adcp.py:53-56; panel blocks e.g. :272-308, :1618-1649).
 
 The reference draws matplotlib figures; this engine renders REAL PNGs

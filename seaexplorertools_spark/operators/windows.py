@@ -24,8 +24,7 @@ from pyspark.sql.window import Window, WindowSpec
 
 
 def _w(partition_by: list[str | Column], order_by: list[str | Column]) -> WindowSpec:
-    w = Window.partitionBy(*partition_by) if partition_by else Window.partitionBy()
-    return w.orderBy(*order_by)
+    return Window.partitionBy(*partition_by).orderBy(*order_by)
 
 
 def centered_mean(

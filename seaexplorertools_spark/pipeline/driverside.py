@@ -1,21 +1,27 @@
 """Optimization loops — O1/O2 (SURVEY §2.8): the reference's scipy
 ``fmin`` fits, in numpy. They touch SMALL data (ping-level magnetometer
 triplets ~1e5 rows; the gridded depth×profile matrix of one mission).
+Both run per mission on the executors inside a grouped ``applyInPandas``,
+so a fleet's missions fit in parallel and nothing comes back to the
+driver:
 
-- O1, the compass fit (reference :389-397), stays on the driver: collect
-  once, optimize, push the fitted coefficients back into the lazy plan
-  as literals.
-- O2, the shear-bias fit (reference calc_bias :1954-1984), runs per
-  mission on the executors, inside ``velocity.calc_bias``'s grouped
-  ``applyInPandas``, so a fleet's missions fit in parallel and no grid
-  comes back to the driver. ``velocity`` registers this module with
-  cloudpickle by value, so the workers need not import this package.
+- O1, the compass fit (reference :389-397), in ``shear.correct_heading``;
+- O2, the shear-bias fit (reference calc_bias :1954-1984), in
+  ``velocity.calc_bias``.
+
+This module registers itself with cloudpickle by value, so the Python
+workers need not import this package.
 """
 
 from __future__ import annotations
 
+import sys
+
 import numpy as np
 import pandas as pd
+from pyspark import cloudpickle
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def _fmin(

@@ -1,143 +1,23 @@
-"""Multi-mission composition: combine per-mission pipeline frames into
-the fleet-wide frames the ``mission_col`` stages consume.
+"""Stage boundary: cut a pipeline frame's lineage between stages.
 
-The reference processes one mission per invocation (its golden test
-drives a single deployment: tests/test_adcp_processing.py:27-69). At
-100 TB the parallelism axis is *missions* — hundreds of deployments
-processed as one job — so this engine runs the heavy GRID + VELOCITY
-stages over a union of per-mission frames with ``options['mission_col']``
-partitioning every window and join (see pipeline/velocity.py). This
-module owns the union step, because doing it naively is the measured
-scale-killer of the whole fleet design:
-
-**Catalyst plan explosion.** Each per-mission shear frame carries a deep
-lineage (interp joins, windows, regrid). A union of N of them embeds N
-copies of that tree in every downstream plan, and the driver re-analyzes
-/ re-optimizes the full logical plan for EVERY action — even when the
-data itself is cached. Measured on local[32] at N=32 missions (20 dives
-each): the velocity stage took 183 s with naive unions vs 14 s after
-lineage truncation, and the grid stage 40 s vs 3 s — pure single-threaded
-driver time, invisible to executor metrics and growing with N.
-
-``combine_missions`` therefore:
-
-1. tags each frame with the mission id (``F.lit`` column, no shuffle);
-2. ``coalesce``s each per-mission frame so the union carries
-   ~``2 × cores`` partitions total instead of N × cores near-empty ones
-   (task-scheduling overhead, the second measured super-linearity);
-3. truncates lineage with an eager ``localCheckpoint`` per combined
-   frame, so every downstream plan starts from a flat scan of
-   materialized blocks.
-
-``localCheckpoint`` stores partitions in the executor block store —
-right for a single batch application (this box, or one cluster job). For
-a long-lived or fault-sensitive fleet job, pass
-``truncate_lineage="checkpoint"`` after ``spark.sparkContext.
-setCheckpointDir(...)`` to use reliable storage, or write the combined
-frames to parquet/Delta as an explicit stage boundary — same effect,
-durable, and the natural shape when the fleet stages run as separate
-cluster jobs anyway.
+A shear frame carries a deep lineage (interp joins, windows, regrid), and
+the driver re-analyzes that whole logical plan for every downstream
+action, even when the data itself is cached. Measured on local[32] at
+N=32 missions (20 dives each): the velocity stage took 183 s on the raw
+lineage vs 14 s after truncation, and the grid stage 40 s vs 3 s — pure
+single-threaded driver time, invisible to executor metrics and growing
+with the plan.
 """
 
 from __future__ import annotations
 
-import functools
-import os
-from collections.abc import Mapping, Sequence
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
-def _cores(spark) -> int:
-    try:
-        return int(spark.sparkContext.defaultParallelism)
-    except Exception:  # pragma: no cover — no active context
-        return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-
-
-def stage_boundary(
-    df: DataFrame, *, truncate_lineage: bool | str = True
-) -> DataFrame:
-    """Public stage-boundary lineage truncation for pipeline composition.
-
-    The per-mission shear frame carries a deep lineage (interp joins,
-    windows, regrid); every downstream action re-analyzes that whole
-    logical plan on the driver even when the data itself is cached
-    (guide §5 / §3.3 "materialise an intermediate to truncate the
-    plan"). Calling this at the shear→grid/velocity seam starts every
-    downstream plan from a flat scan of materialized blocks — measured
-    on local[32]: single-mission velocity stage ~12–16 s → ~8–10 s, and
-    the N=32 fleet velocity 183 s → 14 s (module docstring).
-
-    ``truncate_lineage``: True → eager ``localCheckpoint`` (executor
-    blocks — right for one batch job); ``"checkpoint"`` → reliable
-    ``checkpoint()`` (requires ``setCheckpointDir``, survives executor
-    loss); False → no-op (return ``df`` unchanged).
-
-    Used by :func:`combine_missions` for fleet frames and by
-    single-mission drivers (bench.py's ``_mission_e2e``) at the same
-    seam, so the truncation lives in the library, not in a harness."""
-    if truncate_lineage == "checkpoint":
-        return df.checkpoint(eager=True)
-    if truncate_lineage:
-        return df.localCheckpoint(eager=True)
-    return df
-
-
-def combine_missions(
-    missions: Sequence[Mapping[str, DataFrame]],
-    *,
-    mission_col: str = "mission",
-    mission_ids: Sequence | None = None,
-    total_partitions: int | None = None,
-    truncate_lineage: bool | str = True,
-) -> dict[str, DataFrame]:
-    """Union per-mission frames into fleet frames keyed by ``mission_col``.
-
-    ``missions``: one mapping per mission, all with the same keys (e.g.
-    ``{"gridded": ..., "ping_aug": ..., "glider": ..., "bt": ...}``); a
-    key whose value is None in EVERY mission is dropped (missing ``bt``).
-    ``mission_ids``: per-mission tag values (default ``range(N)``).
-    ``total_partitions``: target partition count for each combined frame
-    (default ``2 × defaultParallelism``), spread evenly across missions
-    via per-frame ``coalesce`` (no shuffle).
-    ``truncate_lineage``: True → eager ``localCheckpoint`` (executor
-    blocks); ``"checkpoint"`` → reliable ``checkpoint()`` (requires a
-    checkpoint dir); False → leave the raw union (plan-explosion risk at
-    large N — see module docstring).
-
-    Returns ``{key: combined DataFrame}``. Rows are exactly the union of
-    the inputs plus the ``mission_col`` tag; per-mission results are
-    unchanged (tests/test_pipeline_scale.py::test_fleet_full_pipeline_parity
-    pins the full-pipeline composition to solo runs at the reference
-    tolerance).
-    """
-    if not missions:
-        raise ValueError("missions must be non-empty")
-    keys = [
-        k
-        for k in missions[0]
-        if any(m.get(k) is not None for m in missions)
-    ]
-    for m in missions:
-        missing = [k for k in keys if m.get(k) is None]
-        if missing:
-            raise ValueError(f"mission missing frames {missing}")
-    ids = list(mission_ids) if mission_ids is not None else list(range(len(missions)))
-    if len(ids) != len(missions):
-        raise ValueError("mission_ids length must match missions")
-
-    spark = missions[0][keys[0]].sparkSession
-    total = total_partitions or 2 * _cores(spark)
-    per_mission = max(1, total // len(missions))
-
-    def one(key: str) -> DataFrame:
-        tagged = [
-            m[key].withColumn(mission_col, F.lit(mid)).coalesce(per_mission)
-            for m, mid in zip(missions, ids)
-        ]
-        df = functools.reduce(lambda a, b: a.unionByName(b), tagged)
-        return stage_boundary(df, truncate_lineage=truncate_lineage)
-
-    return {k: one(k) for k in keys}
+def stage_boundary(df: DataFrame) -> DataFrame:
+    """``df`` materialized by an eager ``localCheckpoint``: every downstream
+    plan starts from a flat scan of executor blocks (guide §5 / §3.3
+    "materialise an intermediate to truncate the plan"). Used at the
+    shear → grid/velocity seam, for one mission or a keyed fleet, and by
+    ``velocity_from_shear`` for its DAC glider."""
+    return df.localCheckpoint(eager=True)

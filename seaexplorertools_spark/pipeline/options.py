@@ -20,7 +20,6 @@ def default_options() -> dict:
         "correctZshear": False,
         "correctZZshear": False,
         # engine knobs
-        "top_mounted": None,  # None → auto-detect from magnetometer Z mean
         "geomag_target": None,  # scalar field strength; None → skip compass fit (offline)
         "y_res": 1.0,  # depth-bin resolution in metres (reference :49)
         # gridding domain: "reference" reproduces the reference's pd.cut
@@ -28,6 +27,7 @@ def default_options() -> dict:
         # pressure, right-closed bins — see gridding.py); "full" keeps
         # every profile/depth with floor bins (engine extension)
         "grid_domain": "reference",
-        "interp_bucket": None,  # optional time-bucket width (s) for scalable interp joins
-        "debug_plots": False,
+        # optional time-bucket width for scalable interp joins, in the time
+        # column's unit: µs (``time_us``)
+        "interp_bucket": None,
     }

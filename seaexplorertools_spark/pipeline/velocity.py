@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -30,13 +29,9 @@ from ..functions import math as M
 from ..operators import windows as W
 from ..operators.grid import bucket
 from ..operators.joins import asof_join, interp_join
-from . import driverside, gridding
+from . import gridding
 from .driverside import apply_bias, fit_shear_bias
 from .fleet import stage_boundary
-
-# the executor bias fit calls into driverside; Python workers need not
-# import this package, so its functions travel inside the pickled closure
-cloudpickle.register_pickle_by_value(driverside)
 
 # groupBy key of calc_bias's single group when no mission_col is set
 _ONE_MISSION = "__bias_group"
@@ -79,7 +74,7 @@ def get_dac(ping_aug: DataFrame, glider: DataFrame, options: dict) -> DataFrame:
     glider = glider.withColumns({"t_sec": t_sec, "speed_e": vg_e, "speed_n": vg_n})
 
     order = ["time_us"]
-    wseq = (Window.partitionBy(*part) if part else Window.partitionBy()).orderBy(*order)
+    wseq = Window.partitionBy(*part).orderBy(*order)
     dt = F.col("t_sec") - F.lag("t_sec").over(wseq)
     glider = glider.withColumns(
         {
@@ -102,7 +97,7 @@ def get_dac(ping_aug: DataFrame, glider: DataFrame, options: dict) -> DataFrame:
         F.min_by(F.struct("rn", "latitude", "longitude", "t_sec"), key).alias("first"),
         F.max_by(F.struct("rn", "latitude", "longitude", "t_sec"), key).alias("last"),
     )
-    wd = (Window.partitionBy(*part) if part else Window.partitionBy()).orderBy("diveNum")
+    wd = Window.partitionBy(*part).orderBy("diveNum")
     dives = dives.select(
         *part,
         "diveNum",
@@ -161,7 +156,7 @@ def surface_drift(glider: DataFrame, options: dict) -> DataFrame:
     fix sequence, unit spacing), gap-filtered (< 21 s), per-dive medians."""
     part = [options["mission_col"]] if options.get("mission_col") else []
     gps = glider.filter((F.col("DeadReckoning") < 1) & (F.col("NAV_RESOURCE") == 116))
-    wseq = (Window.partitionBy(*part) if part else Window.partitionBy()).orderBy("time_us")
+    wseq = Window.partitionBy(*part).orderBy("time_us")
     seq = F.row_number().over(wseq).cast("double")
     gps = gps.withColumns({"seq": seq, "t_sec": F.col("time_us").cast("double") / F.lit(1e6)})
     order = ["seq"]
@@ -201,12 +196,8 @@ def bottom_track(bt: DataFrame, ping_aug: DataFrame, options: dict) -> DataFrame
     soundspeed re-correction (F6) → 3-beam fore solution → ENU (F5) →
     scatter-back join. Returns ping_aug with bt_e/bt_n/bt_u columns.
 
-    Top-mounted instruments see no bottom → returns ping_aug with NULL BT
-    columns (reference refuses, :1481-1483)."""
-    nulls = {c: F.lit(None).cast("double") for c in ("bt_e", "bt_n", "bt_u")}
-    if options["top_mounted"]:
-        return ping_aug.withColumns(nulls)
-
+    Top-mounted instruments see no bottom: their pings (``mount_sign``
+    +1) get NULL BT columns (reference refuses, :1481-1483)."""
     part = [options["mission_col"]] if options.get("mission_col") else []
     thresh = 12.0
     bt = bt.filter(
@@ -220,16 +211,19 @@ def bottom_track(bt: DataFrame, ping_aug: DataFrame, options: dict) -> DataFrame
         F.col("time_us").cast("double").alias("ping_t"),
         "profile_max_p",
         F.col("glider_soundspeed").alias("c_new"),
+        "mount_sign",
     )
     matched = asof_join(
         ping_matched,
         bt,
         on="time_us",
-        values=["ping_t", "profile_max_p", "c_new"],
+        values=["ping_t", "profile_max_p", "c_new", "mount_sign"],
         partition_by=part,
         direction="nearest",
     )
-    matched = matched.filter(F.abs(F.col("profile_max_p") - F.col("pressure")) < 15)
+    matched = matched.filter(
+        (F.abs(F.col("profile_max_p") - F.col("pressure")) < 15) & (F.col("mount_sign") < 0)
+    )
 
     ratio = F.col("c_new") / F.nullif(F.col("speed_of_sound"), F.lit(0.0))
     inv = _beam2xyz_fore()
@@ -238,7 +232,7 @@ def bottom_track(bt: DataFrame, ping_aug: DataFrame, options: dict) -> DataFrame
     y4 = sum((F.lit(c) * vi for c, vi in zip(inv[1], v)), F.lit(0.0))
     z4 = sum((F.lit(c) * vi for c, vi in zip(inv[2], v)), F.lit(0.0))
     enu = M.xyz_to_enu(
-        x4, y4, z4, F.col("heading"), F.col("pitch"), F.col("roll"), top_mounted=options["top_mounted"]
+        x4, y4, z4, F.col("heading"), F.col("pitch"), F.col("roll"), F.col("mount_sign")
     )
     matched = matched.withColumns(dict(zip(["bt_e", "bt_n", "bt_u"], enu)))
     # scatter back onto the ping table at the matched ping time (J2 scatter,
@@ -328,7 +322,7 @@ def reference_shear(
         F.lit(y_res) / F.col("dpdz_g")
     )
     g = g.withColumn("spb", spb)
-    w_all = Window.partitionBy(*mission_part) if mission_part else Window.partitionBy()
+    w_all = Window.partitionBy(*mission_part)
     spb_std = F.stddev_pop("spb").over(w_all)
     g = g.withColumn(
         "spb", F.when(F.abs(F.col("spb")) > spb_std, spb_std).otherwise(F.col("spb"))

@@ -1,73 +1,12 @@
-"""combine_missions (pipeline/fleet.py): tagging, union identity,
-partition bounding, lineage truncation, and input validation."""
+"""stage_boundary (pipeline/fleet.py): rows identical, lineage replaced by
+a flat checkpointed scan."""
 
-import pytest
 from pyspark.sql import functions as F
 
-from seaexplorertools_spark.pipeline import combine_missions
-
-
-def _mission(spark, base):
-    a = spark.range(base, base + 50).select(
-        F.col("id").alias("time_us"), (F.col("id") * 2.0).alias("v")
-    )
-    b = spark.range(base, base + 20).select(
-        F.col("id").alias("time_us"), (F.col("id") + 0.5).alias("p")
-    )
-    return {"glider": a, "ping": b}
-
-
-def test_rows_and_tags_preserved(spark):
-    missions = [_mission(spark, 0), _mission(spark, 1000)]
-    out = combine_missions(missions, mission_ids=["m0", "m1"])
-    assert set(out) == {"glider", "ping"}
-    g = out["glider"]
-    assert "mission" in g.columns
-    counts = {r["mission"]: r["n"] for r in g.groupBy("mission").agg(F.count("*").alias("n")).collect()}
-    assert counts == {"m0": 50, "m1": 50}
-    # values survive the union untouched
-    got = sorted(r["v"] for r in g.filter(F.col("mission") == "m1").collect())
-    assert got == [float(i * 2) for i in range(1000, 1050)]
-
-
-def test_lineage_truncated_and_partitions_bounded(spark):
-    missions = [_mission(spark, k * 100) for k in range(4)]
-    out = combine_missions(missions, total_partitions=8)
-    g = out["glider"]
-    # truncated: the analyzed plan is a flat scan of checkpointed blocks,
-    # no Union/Range operators left for downstream re-analysis
-    plan = g._jdf.queryExecution().analyzed().toString()
-    assert "Union" not in plan and "Range" not in plan
-    assert g.rdd.getNumPartitions() <= 8
-    # opting out keeps the raw union
-    raw = combine_missions(missions, truncate_lineage=False)["glider"]
-    assert "Union" in raw._jdf.queryExecution().analyzed().toString()
-
-
-def test_missing_frame_validation(spark):
-    m0, m1 = _mission(spark, 0), _mission(spark, 100)
-    # a key None in EVERY mission is dropped (optional bt shape)
-    m0a = dict(m0, bt=None)
-    m1a = dict(m1, bt=None)
-    out = combine_missions([m0a, m1a])
-    assert set(out) == {"glider", "ping"}
-    # a key present in one mission but None in another is an error
-    m1b = dict(m1, bt=None)
-    m0b = dict(m0, bt=m0["ping"])
-    with pytest.raises(ValueError, match="missing frames"):
-        combine_missions([m0b, m1b])
-    with pytest.raises(ValueError, match="non-empty"):
-        combine_missions([])
-    with pytest.raises(ValueError, match="length"):
-        combine_missions([m0, m1], mission_ids=[1])
+from seaexplorertools_spark.pipeline import stage_boundary
 
 
 def test_stage_boundary_truncates_and_preserves_rows(spark):
-    """stage_boundary (round 10: the single-mission seam helper bench.py
-    uses) — rows identical, lineage replaced by a flat checkpointed scan,
-    and False is a no-op."""
-    from seaexplorertools_spark.pipeline import stage_boundary
-
     df = (
         spark.range(200)
         .select(F.col("id"), (F.col("id") * 3.5).alias("v"))
@@ -79,4 +18,3 @@ def test_stage_boundary_truncates_and_preserves_rows(spark):
     )
     plan = cut._jdf.queryExecution().analyzed().toString()
     assert "Range" not in plan and "Filter" not in plan
-    assert stage_boundary(df, truncate_lineage=False) is df

@@ -5,8 +5,10 @@ single-mission result exactly (no cross-mission window leakage) — the
 
 from __future__ import annotations
 
-import pandas as pd
+import functools
+
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from seaexplorertools_spark.pipeline import default_options, shear_from_adcp
@@ -14,14 +16,25 @@ from seaexplorertools_spark.pipeline.velocity import get_dac, surface_drift
 from tests.mission_fixture import make_mission
 
 
-def _mission(spark, seed, mission_id, prof_offset):
+def _mission(spark, seed, mission_id, prof_offset, top_mounted=False):
+    """One 3-dive mission, every input tagged with ``mission``. With
+    ``top_mounted`` the magnetometer Z is negated, so the orientation
+    detect reads the mission as top-mounted."""
     glider_pd, ping_pd, cells_pd, bt_pd, attrs = make_mission(n_dives=3, seed=seed)
-    glider_pd = glider_pd.copy()
-    glider_pd["profile_number"] += prof_offset
-    glider = spark.createDataFrame(glider_pd).withColumn("mission", F.lit(mission_id))
-    ping = spark.createDataFrame(ping_pd).withColumn("mission", F.lit(mission_id))
-    cells = spark.createDataFrame(cells_pd)
+    glider_pd = glider_pd.assign(profile_number=glider_pd["profile_number"] + prof_offset)
+    if top_mounted:
+        ping_pd = ping_pd.assign(magnetometer_z=-ping_pd["magnetometer_z"])
+    glider, ping, cells = (
+        spark.createDataFrame(pdf).withColumn("mission", F.lit(mission_id))
+        for pdf in (glider_pd, ping_pd, cells_pd)
+    )
     return glider, ping, cells, attrs
+
+
+def _solo(glider, ping, cells, attrs, options):
+    """shear_from_adcp over one mission's inputs with the tag dropped."""
+    untagged = [df.drop("mission") for df in (cells, ping, glider)]
+    return shear_from_adcp(*untagged, attrs, dict(options))
 
 
 @pytest.fixture(scope="module")
@@ -48,8 +61,8 @@ def test_get_dac_mission_isolation(spark, two_missions):
     base["correctADCPHeading"] = False
 
     # single-mission runs (global windows)
-    _, ping_a, opts_a = shear_from_adcp(ca, pa.drop("mission"), ga.drop("mission"), attrs, dict(base))
-    _, ping_b, opts_b = shear_from_adcp(cb, pb.drop("mission"), gb.drop("mission"), attrs, dict(base))
+    _, ping_a, opts_a = _solo(ga, pa, ca, attrs, base)
+    _, ping_b, opts_b = _solo(gb, pb, cb, attrs, base)
     solo_a = _dac_map(get_dac(ping_a, ga.drop("mission"), opts_a), False)
     solo_b = _dac_map(get_dac(ping_b, gb.drop("mission"), opts_b), False)
 
@@ -77,7 +90,7 @@ def test_surface_drift_mission_isolation(spark, two_missions):
     (ga, pa, ca, attrs), (gb, pb, cb, _) = two_missions
     base = default_options()
     base["correctADCPHeading"] = False
-    _, ping_a, opts_a = shear_from_adcp(ca, pa.drop("mission"), ga.drop("mission"), attrs, dict(base))
+    _, ping_a, opts_a = _solo(ga, pa, ca, attrs, base)
     solo = {
         r["diveNum"]: (r["drift_e"], r["drift_n"])
         for r in surface_drift(ga.drop("mission"), opts_a).collect()
@@ -108,9 +121,7 @@ def test_velocity_from_shear_mission_isolation(spark, two_missions):
     grids, pings = {}, {}
     solo = {}
     for mid, (g, p, c) in {"A": (ga, pa, ca), "B": (gb, pb, cb)}.items():
-        gridded, ping_aug, opts = shear_from_adcp(
-            c, p.drop("mission"), g.drop("mission"), attrs, dict(base)
-        )
+        gridded, ping_aug, opts = _solo(g, p, c, attrs, base)
         gridded = gridded.cache()
         grids[mid], pings[mid] = gridded, ping_aug
         out = velocity_from_shear(gridded, ping_aug, g.drop("mission"), None, opts)
@@ -125,7 +136,6 @@ def test_velocity_from_shear_mission_isolation(spark, two_missions):
     )
     combined_cells = grids["A"].unionByName(grids["B"])
     opts = dict(base)
-    opts["top_mounted"] = False
     opts["mission_col"] = "mission"
     both = velocity_from_shear(combined_cells, combined_ping, combined_glider, None, opts)
     got = {
@@ -168,28 +178,93 @@ def _unpartitioned_windows(df) -> int:
 
 
 def test_mission_partitioned_plans_have_no_global_windows(spark, two_missions):
-    """With options['mission_col'] set, EVERY window in the DAC and
+    """With options['mission_col'] set, EVERY window in the shear, DAC and
     referencing plans must carry a partition key — a single unpartitioned
     window would serialize the whole fleet of missions through one task."""
     from seaexplorertools_spark.pipeline.velocity import reference_shear
 
     (ga, pa, ca, attrs), (gb, pb, cb, _) = two_missions
-    base = default_options()
-    base["correctADCPHeading"] = False
-    gridded_a, ping_a, opts = shear_from_adcp(
-        ca, pa.drop("mission"), ga.drop("mission"), attrs, dict(base)
-    )
-    combined_glider = ga.unionByName(gb)
-    combined_ping = ping_a.withColumn("mission", F.lit("A"))
-    opts = dict(opts)
+    opts = default_options()
     opts["mission_col"] = "mission"
-
-    dac = get_dac(combined_ping, combined_glider, opts)
+    glider = ga.unionByName(gb)
+    gridded, ping_aug, opts = shear_from_adcp(
+        ca.unionByName(cb), pa.unionByName(pb), glider, attrs, opts
+    )
+    assert _unpartitioned_windows(gridded) == 0
+    dac = get_dac(ping_aug, glider, opts)
     assert _unpartitioned_windows(dac) == 0
-
-    # cut the stage-1 lineage: stage 1 runs per mission by design (its
-    # global interp windows are the documented single-series semantics),
-    # so the assertion targets the stage-3 plan alone
-    gridded = gridded_a.localCheckpoint(eager=True)
     ref = reference_shear(gridded, dac, opts)
     assert _unpartitioned_windows(ref) == 0
+
+
+GRIDDED = ["v1", "v2", "v3", "v4", "e", "n", "u", "sh_e", "sh_n", "sh_u", "depth_offset"]
+
+
+def _by_ping(df, cols, keys=("time_us", "gridded_bin")):
+    rows = df.select(*keys, *cols).collect()
+    return {tuple(r[k] for k in keys): tuple(r[c] for c in cols) for r in rows}
+
+
+def _assert_same(got, want):
+    assert got.keys() == want.keys()
+    for k, w in want.items():
+        for g, x in zip(got[k], w):
+            assert (g is None and x is None) or g == pytest.approx(x, rel=1e-9, abs=1e-12), k
+
+
+def _keyed_vs_solo(missions, options):
+    """Shear of ``missions`` ({id: (glider, ping, cells, attrs)}) in ONE
+    keyed run and each solo; returns {id: ((keyed gridded, keyed
+    ping_aug), (solo gridded, solo ping_aug))}, keyed frames filtered to
+    the mission."""
+    frames = list(missions.values())
+    union = [functools.reduce(DataFrame.unionByName, [m[i] for m in frames]) for i in range(3)]
+    keyed = shear_from_adcp(
+        union[2], union[1], union[0], frames[0][3], {**options, "mission_col": "mission"}
+    )
+    out = {}
+    for mid, inputs in missions.items():
+        mine = [df.filter(F.col("mission") == mid) for df in keyed[:2]]
+        out[mid] = (mine, _solo(*inputs, options)[:2])
+    return out
+
+
+def test_mixed_mount_fleet_matches_solo(spark, two_missions):
+    """A fleet of a bottom-mounted and a top-mounted mission (magnetometer Z
+    negated) in one keyed shear run: each mission gets its own mount sign,
+    and its regridded beams, ENU, shear and heading equal its solo run."""
+    (ga, pa, ca, attrs), _ = two_missions
+    top = _mission(spark, 11, "T", 1000, top_mounted=True)
+    options = default_options()  # heading correction on: the sign enters mag_heading too
+    runs = _keyed_vs_solo({"A": (ga, pa, ca, attrs), "T": top}, options)
+    for mid, sign in (("A", -1.0), ("T", 1.0)):
+        (k_grid, k_ping), (s_grid, s_ping) = runs[mid]
+        assert {r[0] for r in k_grid.select("mount_sign").distinct().collect()} == {sign}
+        _assert_same(_by_ping(k_grid, GRIDDED), _by_ping(s_grid, GRIDDED))
+        _assert_same(
+            _by_ping(k_ping, ["heading", "mount_sign"], ("time_us",)),
+            _by_ping(s_ping, ["heading", "mount_sign"], ("time_us",)),
+        )
+    # the top-mounted ladder points up: positive depth offsets
+    (k_grid, _), _ = runs["T"]
+    assert k_grid.agg(F.min("depth_offset")).first()[0] == 0.0
+
+
+def test_geomag_keyed_fit_matches_solo(spark, two_missions):
+    """With a geomag target, the compass is fitted per mission: the keyed
+    2-mission run's corrected heading equals each mission's solo fit, and
+    differs from the uncalibrated heading."""
+    (ga, pa, ca, attrs), (gb, pb, cb, _) = two_missions
+    options = default_options()
+    options["geomag_target"] = 400.0
+    runs = _keyed_vs_solo({"A": (ga, pa, ca, attrs), "B": (gb, pb, cb, attrs)}, options)
+    identity = _solo(ga, pa, ca, attrs, default_options())[1]
+    for mid in ("A", "B"):
+        (_, k_ping), (_, s_ping) = runs[mid]
+        got = _by_ping(k_ping, ["heading"], ("time_us",))
+        _assert_same(got, _by_ping(s_ping, ["heading"], ("time_us",)))
+    raw = _by_ping(identity, ["heading"], ("time_us",))
+    fitted = _by_ping(runs["A"][0][1], ["heading"], ("time_us",))
+    # headings are NULL where the declination is (pings outside the glider hull)
+    diffs = [abs(fitted[t][0] - raw[t][0]) for t in raw if raw[t][0] is not None]
+    assert len(diffs) > 100 and max(diffs) > 1e-3

@@ -40,8 +40,23 @@ def stage1(mission):
 
 
 def test_orientation_autodetect(stage1):
-    _, _, options = stage1
-    assert options["top_mounted"] is False  # magnetometer_z > 0 in fixture
+    """magnetometer_z > 0 in the fixture → bottom-mounted: every ping and
+    every gridded cell carries mount_sign −1."""
+    gridded, ping_aug, _ = stage1
+    for df in (ping_aug, gridded):
+        signs = {r[0] for r in df.select("mount_sign").distinct().collect()}
+        assert signs == {-1.0}
+
+
+def test_shear_plan_runs_no_job(spark, mission):
+    """Building shear_from_adcp submits no Spark job, with or without a
+    geomag target: orientation, ladder and compass fit are lazy
+    per-mission tables in the plan."""
+    glider, ping, cells, attrs = mission[5], mission[6], mission[7], mission[4]
+    for target in (None, 400.0):
+        options = {**default_options(), "geomag_target": target}
+        _, n_jobs = _jobs_in(spark, lambda: shear_from_adcp(cells, ping, glider, attrs, options))
+        assert n_jobs == 0, target
 
 
 def test_stage1_shapes(stage1, mission):
@@ -112,16 +127,16 @@ def test_regrid_matches_reference_interp(stage1, mission):
 
 def test_enu_matches_numpy(stage1):
     """F5 rotation vs the reference M_xyz2enu formula (:1134-1146)."""
-    gridded, _, options = stage1
+    gridded, _, _ = stage1
     rows = (
         gridded.filter(F.col("x").isNotNull() & F.col("e").isNotNull())
-        .select("x", "y", "z", "heading", "pitch", "roll", "e", "n", "u")
+        .select("x", "y", "z", "heading", "pitch", "roll", "e", "n", "u", "mount_sign")
         .limit(50)
         .collect()
     )
     assert rows
-    d = 1.0 if options["top_mounted"] else -1.0
     for r in rows:
+        d = r.mount_sign
         hh = np.pi * (r.heading - 90) / 180
         pp = np.pi * r.pitch / 180
         rr = np.pi * r.roll / 180

@@ -17,12 +17,11 @@ def test_bucketed_alignment_matches_global(spark):
     ping = spark.createDataFrame(ping_pd)
 
     base = default_options()
-    base["top_mounted"] = False
-    a, _ = align_glider_to_pings(ping, glider, dict(base))
+    a = align_glider_to_pings(ping, glider, dict(base))
 
     bucketed = dict(base)
     bucketed["interp_bucket"] = 3600e6  # 1 h in µs — ≫ the 10 s cadence
-    b, _ = align_glider_to_pings(ping, glider, bucketed)
+    b = align_glider_to_pings(ping, glider, bucketed)
 
     cols = ["latitude", "longitude", "salinity", "profile_number", "depth"]
     av = {r["time_us"]: tuple(r[c] for c in cols) for r in a.select("time_us", *cols).collect()}

@@ -1,14 +1,15 @@
 """Larger-scale multi-mission e2e: ~10× the standard fixture (3 missions ×
-20 dives), overlapping clocks, ``mission_col`` partitioning AND the
-``interp_bucket`` scale mode engaged together. Per-mission results must
-match each solo run within the reference's own e2e tolerance regime
-(atol=1e-7, rtol=1e-3, equal_nan — tests/test_adcp_processing.py:48)."""
+20 dives), overlapping clocks, ``mission_col`` partitioning of every
+stage (shear included) AND the ``interp_bucket`` scale mode engaged
+together. Per-mission results must match each solo run within the
+reference's own e2e tolerance regime (atol=1e-7, rtol=1e-3, equal_nan —
+tests/test_adcp_processing.py:48)."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from seaexplorertools_spark.pipeline import (
     default_options,
@@ -24,45 +25,40 @@ BUCKET_US = 3600e6  # 1 h in µs — far above the ~10 s sample gap, so exact
 
 @pytest.fixture(scope="module")
 def runs(spark):
+    """Each mission solo (unkeyed), then all three in ONE keyed run: one
+    shear plan and one velocity plan over sources tagged with a
+    ``mission`` column."""
     base = default_options()
     base["correctADCPHeading"] = False
 
-    solo, grids, pings, gliders = {}, {}, {}, {}
+    solo, keyed = {}, {"glider": [], "ping": [], "cells": []}
     for mid, (seed, prof_offset) in MISSIONS.items():
         glider_pd, ping_pd, cells_pd, bt_pd, attrs = make_mission(
             n_dives=N_DIVES, seed=seed
         )
-        glider_pd = glider_pd.copy()
-        glider_pd["profile_number"] += prof_offset
+        glider_pd = glider_pd.assign(profile_number=glider_pd["profile_number"] + prof_offset)
         glider = spark.createDataFrame(glider_pd)
         ping = spark.createDataFrame(ping_pd)
         cells = spark.createDataFrame(cells_pd)
         gridded, ping_aug, opts = shear_from_adcp(cells, ping, glider, attrs, dict(base))
-        gridded = gridded.cache()
-        grids[mid], pings[mid], gliders[mid] = gridded, ping_aug, glider
-        out = velocity_from_shear(gridded, ping_aug, glider, None, opts)
+        out = velocity_from_shear(gridded.cache(), ping_aug, glider, None, opts)
         solo[mid] = {
             (r["profile_num"], r["depth_bin"]): (r["ADCP_E"], r["ADCP_N"])
             for r in out.select("profile_num", "depth_bin", "ADCP_E", "ADCP_N").collect()
             if r["profile_num"] is not None and r["depth_bin"] is not None
         }
+        for name, pdf in zip(keyed, (glider_pd, ping_pd, cells_pd)):
+            keyed[name].append(pdf.assign(mission=mid))
 
-    combined_glider = None
-    combined_ping = None
-    combined_cells = None
-    for mid in MISSIONS:
-        g = gliders[mid].withColumn("mission", F.lit(mid))
-        p = pings[mid].withColumn("mission", F.lit(mid))
-        c = grids[mid]
-        combined_glider = g if combined_glider is None else combined_glider.unionByName(g)
-        combined_ping = p if combined_ping is None else combined_ping.unionByName(p)
-        combined_cells = c if combined_cells is None else combined_cells.unionByName(c)
-
+    glider, ping, cells = (
+        spark.createDataFrame(pd.concat(keyed[n], ignore_index=True))
+        for n in ("glider", "ping", "cells")
+    )
     opts = dict(base)
-    opts["top_mounted"] = False
     opts["mission_col"] = "mission"
     opts["interp_bucket"] = BUCKET_US  # bucketed union-window interp joins
-    both = velocity_from_shear(combined_cells, combined_ping, combined_glider, None, opts)
+    gridded, ping_aug, opts = shear_from_adcp(cells, ping, glider, attrs, opts)
+    both = velocity_from_shear(gridded.cache(), ping_aug, glider, None, opts)
     got = {}
     for r in both.select("mission", "profile_num", "depth_bin", "ADCP_E", "ADCP_N").collect():
         # NULL grid keys are out-of-range bucket artifacts of the full join
@@ -96,12 +92,10 @@ def test_scale10_mission_isolation_reference_tolerance(runs):
 
 
 def test_fleet_full_pipeline_parity(spark):
-    """Round-9 fleet architecture (scripts/fleet_bench.py): per-mission
-    SHEAR (concurrently submitted; attrs/ladder/orientation are
-    per-mission scalars by design) + ONE combined grid/velocity DAG
-    with mission_col — including the BOTTOM-TRACK leg this module's
-    3-mission test leaves out. 2-mission fleet must reproduce each solo
-    run at the reference e2e tolerance."""
+    """The fleet architecture of scripts/fleet_bench.py — one keyed plan
+    per stage over keyed sources — including the BOTTOM-TRACK input this
+    module's 3-mission test leaves out: a 2-mission fleet must reproduce
+    each solo run at the reference e2e tolerance."""
     from scripts.fleet_bench import parity
 
     assert parity(spark) == 0
